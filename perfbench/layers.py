@@ -1,6 +1,5 @@
 """Per-layer metrics of a traced run, computed from its spans, the
-tracer's counters, the status-store job table and the streaming
-listener. Every name of ``per_layer_names()`` is emitted on every
+tracer's counters and the status-store job table. Every name of ``per_layer_names()`` is emitted on every
 workload; a layer the workload does not reach reads 0. What each
 metric should move, and on which workload, is in ``layers.json``.
 """
@@ -11,7 +10,7 @@ import os
 import statistics
 
 from tracing import descendants, self_times
-from workloads import CURATE_STAGES, INGEST_STAGES, TARGET_QUERIES
+from workloads import INGEST_STAGES, TARGET_QUERIES
 
 SELF_LAYERS = (
     "io.sources", "io.sinks", "operators.mentions", "operators.coref",
@@ -19,11 +18,11 @@ SELF_LAYERS = (
     "operators.counts", "operators.dedup", "operators.graph",
     "operators.curation",
 )
-JOB_LAYERS = ("operators.coref", "operators.dedup", "operators.graph")
+JOB_LAYERS = ("operators.coref", "operators.graph")
 SPARK_TOTALS = (
     ("spark.jobs", "count"), ("spark.stages", "count"),
     ("spark.tasks", "count"), ("spark.shuffle_write_bytes", "bytes"),
-    ("spark.spill_bytes", "bytes"), ("spark.executor_run_s", "s"),
+    ("spark.executor_run_s", "s"),
     ("spark.executor_cpu_s", "s"),
 )
 
@@ -33,7 +32,6 @@ def per_layer_names() -> list[tuple[str, str, str]]:
     out = [
         ("session.plan_memo.calls", "count", "lower"),
         ("session.plan_memo.hit_ratio", "ratio", "higher"),
-        ("session.plan_memo.evictions", "count", "lower"),
         ("session.read.calls", "count", "lower"),
         ("session.read.self_s", "s", "lower"),
         ("session.expr_memo.hit_ratio", "ratio", "higher"),
@@ -49,13 +47,9 @@ def per_layer_names() -> list[tuple[str, str, str]]:
         ("io.sinks.bytes_per_input_byte", "ratio", "lower"),
     ]
     out += [(f"plans.ingest.{s}_s", "s", "lower") for s in INGEST_STAGES]
-    out += [(f"plans.curate.{s}_s", "s", "lower") for s in CURATE_STAGES]
     out += [
         ("suite.construct_s", "s", "lower"),
         ("suite.construct_jobs", "count", "lower"),
-        ("streaming.queries", "count", "lower"),
-        ("streaming.batches", "count", "lower"),
-        ("streaming.batch_s", "s", "lower"),
         ("spark.plan_s", "s", "lower"),
         ("spark.execute_s", "s", "lower"),
     ]
@@ -80,7 +74,7 @@ def _ratio(num: float, den: float) -> float:
     return num / den if den else 0.0
 
 
-def layer_metrics(wl, tracer, spans, roots, jobs, streams, *, region_s,
+def layer_metrics(wl, tracer, spans, roots, jobs, *, region_s,
                   cpus, get_spark_s) -> dict[str, tuple[float, str]]:
     """Per-layer metrics over the timed region, normalised per
     operation (one pipeline call or one pass of the query mix)."""
@@ -105,7 +99,6 @@ def layer_metrics(wl, tracer, spans, roots, jobs, streams, *, region_s,
     vals["session.plan_memo.calls"] = memo_calls / n_ops
     vals["session.plan_memo.hit_ratio"] = _ratio(
         c.get("session.plan_memo.hits", 0), memo_calls)
-    vals["session.plan_memo.evictions"] = c.get("session.plan_memo.evictions", 0) / n_ops
     reads = [s for s in spans if s.name in (
         "session.read_table", "session.read_spread")]
     vals["session.read.calls"] = len(reads) / n_ops
@@ -133,14 +126,12 @@ def layer_metrics(wl, tracer, spans, roots, jobs, streams, *, region_s,
     vals["io.sinks.bytes_written"] = written / n_ops
     vals["io.sinks.bytes_per_input_byte"] = _ratio(written / n_ops, wl.input_bytes)
 
-    # pipeline stages, from the timings the pipelines return
+    # pipeline stages, from the timings ingest returns
     for s in INGEST_STAGES:
         vals[f"plans.ingest.{s}_s"] = 0.0
-    for s in CURATE_STAGES:
-        vals[f"plans.curate.{s}_s"] = 0.0
-    prefix = "plans.ingest" if wl.name.startswith("ingest") else "plans.curate"
     for stage in {k for t in wl.timings for k in t}:
-        vals[f"{prefix}.{stage}_s"] = _median(t[stage] for t in wl.timings if stage in t)
+        vals[f"plans.ingest.{stage}_s"] = _median(
+            t[stage] for t in wl.timings if stage in t)
 
     # suite: construction of each query, before the forcing action
     constructs = [s for s in spans if s.layer == "suite.construct"]
@@ -148,17 +139,13 @@ def layer_metrics(wl, tracer, spans, roots, jobs, streams, *, region_s,
     vals["suite.construct_jobs"] = len(
         jobs_under(descendants(spans, {s.id for s in constructs}))) / n_ops
 
-    vals["streaming.queries"] = streams.queries / n_ops
-    vals["streaming.batches"] = streams.batches / n_ops
-    vals["streaming.batch_s"] = streams.batch_ms / 1000 / n_ops
 
     vals["spark.plan_s"] = c.get("spark.plan_s", 0.0) / n_ops
     execs = [s for s in spans if s.layer == "spark.exec"]
     vals["spark.execute_s"] = sum(s.end - s.start for s in execs) / n_ops
     vals["spark.jobs"] = len(jobs) / n_ops
     for name, key in (("spark.stages", "stages"), ("spark.tasks", "tasks"),
-                      ("spark.shuffle_write_bytes", "shuffle_write_bytes"),
-                      ("spark.spill_bytes", "spill_bytes")):
+                      ("spark.shuffle_write_bytes", "shuffle_write_bytes")):
         vals[name] = sum(j[key] for j in jobs) / n_ops
     run_s = sum(j["run_ms"] for j in jobs) / 1000
     vals["spark.executor_run_s"] = run_s / n_ops

@@ -28,12 +28,14 @@ def main() -> int:
     from oracle_harness import compare, duck_con
     from workloads import DATA_DIR, DIGESTS, QUERY_MIX
 
+    from run import DRIVER_MEMORY
+
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    os.environ.setdefault("SPARK_DRIVER_MEM", "2g")
     from vizlinc_ingester_spark.session import get_spark
     from vizlinc_ingester_spark.suite import collect_suite
 
-    spark = get_spark(app_name="perfbench-digests")
+    spark = get_spark(app_name="perfbench-digests",
+                      extra_conf={"spark.driver.memory": DRIVER_MEMORY})
     spark.sparkContext.setLogLevel("ERROR")
     queries, oracles = collect_suite()
     work = os.path.join(ROOT, ".perfbench_work", f"digests-{os.getpid()}")

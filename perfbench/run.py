@@ -5,10 +5,11 @@
 Run from the root of a checkout. One process runs one workload on
 ``local[<nproc>]``: it starts a Spark session through
 ``session.get_spark``, makes its inputs from ``--seed``, times
-operations for at least ``--seconds`` (at least one), checks their
-outputs outside the timed region and prints one record line and, last,
-one JSON result line. With ``--trace 1`` the metrics are the per-layer
-ones (see perfbench/layers.json) and the spans go to a file.
+operations for at least ``--seconds`` (and at least the workload's
+``min_ops`` of them), checks their outputs outside the timed region and
+prints one record line and, last, one JSON result line. With
+``--trace 1`` the metrics are the per-layer ones (see
+perfbench/layers.json) and the spans go to a file.
 
 Everything the run writes stays inside the checkout, under
 ``.perfbench_work/`` (removed at the end) and ``.perfbench_out/``.
@@ -30,6 +31,10 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PKG = "vizlinc_ingester_spark"
+#: driver JVM heap. ``get_spark`` defaults to 16g, the whole memory of
+#: a 16 GB box; the benchmark's inputs need far less, so the heap is
+#: pinned here (not taken from the environment) and recorded per run.
+DRIVER_MEMORY = "2g"
 
 
 def process_age_s() -> float:
@@ -46,7 +51,7 @@ class PeakRss(threading.Thread):
     """Samples the resident memory of this process and all its
     descendants (the JVM and the Python workers) and keeps the peak."""
 
-    def __init__(self, period_s: float = 0.5):
+    def __init__(self, period_s: float = 0.2):
         super().__init__(daemon=True)
         self.period_s = period_s
         self.peak_bytes = 0
@@ -70,6 +75,21 @@ class PeakRss(threading.Thread):
             out.append(p)
             todo.extend(children.get(p, ()))
         return out
+
+    def cpu_times(self) -> tuple[float, float]:
+        """(user, system) CPU seconds of this process tree so far,
+        reaped descendants included."""
+        user = system = 0
+        for p in self.tree():
+            try:
+                with open(f"/proc/{p}/stat") as fh:
+                    f = fh.read().rsplit(")", 1)[1].split()
+                user += int(f[11]) + int(f[13])
+                system += int(f[12]) + int(f[14])
+            except (OSError, ValueError, IndexError):
+                pass
+        tck = os.sysconf("SC_CLK_TCK")
+        return user / tck, system / tck
 
     def sample(self) -> None:
         total = 0
@@ -114,6 +134,13 @@ def quartiles(values: list[float]) -> tuple[float, float]:
     return q[1], q[2]
 
 
+def steal_s() -> float:
+    """CPU seconds the hypervisor gave to other guests, all CPUs, since
+    boot (the ``steal`` column of /proc/stat)."""
+    with open("/proc/stat") as fh:
+        return int(fh.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+
+
 def loadavg() -> list[float]:
     with open("/proc/loadavg") as fh:
         return [float(x) for x in fh.read().split()[:3]]
@@ -126,7 +153,6 @@ def configure_env(work: str, cpus: int) -> None:
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    os.environ.setdefault("SPARK_DRIVER_MEM", "2g")
     os.environ["PYTHONDONTWRITEBYTECODE"] = "1"
     import tempfile
 
@@ -137,6 +163,7 @@ def start_spark(work: str, cpus: int):
     from vizlinc_ingester_spark.session import get_spark
 
     conf = {
+        "spark.driver.memory": DRIVER_MEMORY,
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.driver.extraJavaOptions":
@@ -229,16 +256,14 @@ def main(argv=None) -> int:
         spark.sparkContext.setLogLevel("ERROR")
         tracer = None
         if args.trace:
-            from tracing import StreamingCounter, Tracer
+            from tracing import Tracer
 
-            import vizlinc_ingester_spark.plans.curate  # noqa: F401
             import vizlinc_ingester_spark.plans.ingest  # noqa: F401
             import vizlinc_ingester_spark.suite  # noqa: F401
 
             vizlinc_ingester_spark.suite.collect_suite()  # import every module
             tracer = Tracer(spark)
             tracer.install()
-            streams = StreamingCounter(spark)
         ctx = Ctx(spark, args.seed, work, args.size == "smoke", tracer)
         wl = WORKLOADS[args.workload](ctx)
         wl.setup()
@@ -250,15 +275,14 @@ def main(argv=None) -> int:
             tracer.counters.clear()
             tracer.overhead_s = 0.0
             n_spans0 = len(tracer.spans)
-            streams.settle()  # events of set-up queries arrive late
-            streams.queries = streams.batches = streams.terminated = 0
-            streams.batch_ms = 0.0
-        op_s, results, roots = [], [], []
+        op_s, op_cpu_s, op_sys_s, results, roots = [], [], [], [], []
         attempted = failed = 0
+        steal0 = steal_s()
         t_region = time.perf_counter()
         k = 0
-        while k == 0 or time.perf_counter() - t_region < args.seconds:
+        while k < wl.min_ops or time.perf_counter() - t_region < args.seconds:
             t0 = time.perf_counter()
+            u0, s0 = rss.cpu_times()
             attempted += 1
             try:
                 if tracer is None:
@@ -272,9 +296,13 @@ def main(argv=None) -> int:
                 wl.fail(f"op {k}: {type(e).__name__}: {e}"[:300])
                 res = None
             op_s.append(time.perf_counter() - t0)
+            u1, s1 = rss.cpu_times()
+            op_cpu_s.append(u1 - u0 + s1 - s0)
+            op_sys_s.append(s1 - s0)
             results.append(res)
             k += 1
         region_s = time.perf_counter() - t_region
+        region_steal_s = steal_s() - steal0
         # --- end of timed region --------------------------------------
         if tracer is not None:
             last_job = tracer.job_count()
@@ -297,16 +325,15 @@ def main(argv=None) -> int:
         if tracer is None:
             metrics = {
                 "setup_s": (setup_s, "s"),
-                "op_s": (statistics.median(op_s), "s"),
+                "op_cpu_s": (statistics.median(op_cpu_s), "s"),
                 "peak_rss_mb": (rss.peak_bytes / 2**20, "MB"),
             }
         else:
             from layers import layer_metrics
 
-            streams.settle()
             jobs = [j for j in tracer.job_table(first_job) if j["job"] < last_job]
             metrics = layer_metrics(
-                wl, tracer, region_spans, roots, jobs, streams,
+                wl, tracer, region_spans, roots, jobs,
                 region_s=region_s, cpus=cpus, get_spark_s=get_spark_s,
             )
             out = args.spans or os.path.join(
@@ -317,14 +344,15 @@ def main(argv=None) -> int:
                 "timed_region": [t_region - tracer.t0, t_region - tracer.t0 + region_s],
                 "metrics": {k: v for k, (v, _u) in metrics.items()},
             })
-            streams.close()
         record = {
             "workload": wl.name, "seed": args.seed, "trace": args.trace,
-            "size": args.size, "nproc": cpus,
+            "size": args.size, "nproc": cpus, "driver_memory": DRIVER_MEMORY,
             "loadavg_before": load_before, "loadavg_after": loadavg(),
-            "samples": {"op_s": len(op_s), "steps": len(wl.steps), "setup_s": 1},
-            "op_s": op_s, "step_p50_s": p50, "step_p75_s": p75,
-            "region_s": region_s, "inputs": wl.record(),
+            "samples": {"op_s": len(op_s), "op_cpu_s": len(op_cpu_s),
+                        "steps": len(wl.steps), "setup_s": 1},
+            "op_s": op_s, "op_cpu_s": op_cpu_s, "op_sys_s": op_sys_s,
+            "step_p50_s": p50, "step_p75_s": p75,
+            "region_s": region_s, "region_steal_s": region_steal_s, "inputs": wl.record(),
             "stage_timings": wl.timings,
             "failures": wl.failures[:20],
         }

@@ -2,11 +2,12 @@
 
     python3 perfbench/smoke_test.py [workload ...]
 
-Runs each workload named in BENCHMARK.json (or the ones given) once
-untraced and once traced at the smallest input size, and checks that
-the last output line is a result with exactly the contract's keys,
-that the outputs were correct, and that every metric named in
-BENCHMARK.json is emitted with its unit. Exits 1 on any mismatch.
+Runs each workload named in BENCHMARK.json, and ingest_auto, which is
+run by hand (or the workloads given), once untraced and once traced at
+the smallest input size, and checks that the last output line is a
+result with exactly the contract's keys, that the outputs were correct,
+and that every metric named in BENCHMARK.json is emitted with its unit.
+Exits 1 on any mismatch.
 """
 
 from __future__ import annotations
@@ -50,7 +51,7 @@ def check_run(workload: str, trace: int, want: dict[str, str]) -> list[str]:
 def main(argv: list[str]) -> int:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
-    workloads = argv or [w["name"] for w in bench["workloads"]]
+    workloads = argv or [w["name"] for w in bench["workloads"]] + ["ingest_auto"]
     e2e = {m["name"]: m["unit"] for m in bench["end_to_end"]}
     layer = {m["name"]: m["unit"] for m in bench["per_layer"]}
     errs = []

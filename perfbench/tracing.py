@@ -366,44 +366,3 @@ def descendants(spans: list[Span], roots: set[int]) -> set[int]:
         if s.parent in out:
             out.add(s.id)
     return out
-
-
-class StreamingCounter:
-    """Counts streaming queries, micro-batches and batch time through a
-    ``StreamingQueryListener`` (events arrive asynchronously)."""
-
-    def __init__(self, spark):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        counter = self
-        self.queries = 0
-        self.batches = 0
-        self.batch_ms = 0.0
-        self.terminated = 0
-
-        class _L(StreamingQueryListener):
-            def onQueryStarted(self, event):
-                counter.queries += 1
-
-            def onQueryProgress(self, event):
-                counter.batches += 1
-                counter.batch_ms += event.progress.batchDuration
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                counter.terminated += 1
-
-        self.listener = _L()
-        self.spark = spark
-        spark.streams.addListener(self.listener)
-
-    def settle(self, timeout_s: float = 5.0) -> None:
-        """Wait until every started query has reported termination."""
-        end = time.monotonic() + timeout_s
-        while self.terminated < self.queries and time.monotonic() < end:
-            time.sleep(0.05)
-
-    def close(self) -> None:
-        self.spark.streams.removeListener(self.listener)
