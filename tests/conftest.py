@@ -11,6 +11,12 @@ from vizlinc_ingester_spark.session import get_spark
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
+# get_spark's 16g default driver heap is as large as a 16 GB test box's
+# RAM: cached and checkpointed blocks fill it over the full suite until
+# the kernel OOM-kills the JVM and every later Spark test fails. The
+# sf0.001 suite needs far less; an explicit SPARK_DRIVER_MEM still wins.
+os.environ.setdefault("SPARK_DRIVER_MEM", "8g")
+
 
 def _find_jdbc_jar() -> str | None:
     """Locate an embedded-database JDBC driver jar (DuckDB) so the S6

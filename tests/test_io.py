@@ -275,10 +275,8 @@ def test_pdf_flate_extractor(spark):
         b"BT (two) Tj ET\nendstream\nendobj\n%%EOF"
     )
     assert _extract_one(spark, pdf2, "pdf") == "one two"
-    # the uncompressed-subset Column path still works for raw streams
+    # the same kernel reads a raw (uncompressed) stream
     raw = b"%PDF-1.4\nBT (plain \\(x\\)) Tj ET\n%%EOF"
-    assert _extract_one(spark, raw, "pdf_uncompressed") == "plain (x)"
-    # and the UDF path agrees with it byte-for-byte on that subset
     assert _extract_one(spark, raw, "pdf") == "plain (x)"
 
 
@@ -452,18 +450,15 @@ def test_ppt_extractor_roundtrip(spark):
     assert _extract_one(spark, b"junk", "ppt") is None
 
 
-def test_extract_text_auto_mixed_corpus(spark, tmp_path):
-    """The Tika-class front door over FILES: a mixed-format directory
-    tree routed to per-format extractors by extension (reference hands
-    every file to Tika, src/TextExtractor.groovy:12-28)."""
+def _mixed_tree(tmp_path) -> str:
+    """A directory tree holding one file per routed format family plus
+    an unknown extension."""
     from vizlinc_ingester_spark.io.sources import (
         _doc_bytes_of_text, _docx_bytes_of_text, _odt_bytes_of_text,
         _pdf_bytes_of_text, _ppt_bytes_of_text, _pptx_bytes_of_text,
         _xls_bytes_of_text, _xlsx_bytes_of_text,
     )
-    from vizlinc_ingester_spark.session import ship_package
 
-    ship_package(spark)
     root = tmp_path / "mixed"
     (root / "sub").mkdir(parents=True)
     (root / "a.txt").write_text("plain text file")
@@ -478,8 +473,14 @@ def test_extract_text_auto_mixed_corpus(spark, tmp_path):
     (root / "j.unknownext").write_text("fallback utf8")
     (root / "k.xlsx").write_bytes(_xlsx_bytes_of_text("modern sheet text"))
     (root / "l.pptx").write_bytes(_pptx_bytes_of_text("modern slide text"))
+    return str(root)
 
-    scanned = sources.scan_directory(spark, str(root), "*")
+
+def test_extract_text_auto_mixed_corpus(spark, tmp_path):
+    """The Tika-class front door over FILES: a mixed-format directory
+    tree routed to per-format extractors by extension (reference hands
+    every file to Tika, src/TextExtractor.groovy:12-28)."""
+    scanned = sources.scan_directory(spark, _mixed_tree(tmp_path), "*")
     out = sources.extract_text_auto(scanned)
     got = {r["name"]: r["text"] for r in out.collect()}
     assert got == {
@@ -496,6 +497,22 @@ def test_extract_text_auto_mixed_corpus(spark, tmp_path):
         "k.xlsx": "modern sheet text",
         "l.pptx": "modern slide text",
     }
+
+
+def test_extract_text_auto_one_scan_one_python_node(spark, tmp_path):
+    """The auto front door is one projection over one scan: the tree
+    is listed and read once, and every container format shares one
+    Python evaluation node."""
+    scanned = sources.scan_directory(spark, _mixed_tree(tmp_path), "*")
+    plan = (
+        sources.extract_text_auto(scanned)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Scan binaryFile") == 1, plan
+    python_nodes = sum(
+        plan.count(node) for node in ("ArrowEvalPython", "BatchEvalPython")
+    )
+    assert python_nodes <= 1, plan
 
 
 def test_ingest_auto_front_door(spark, tmp_path):

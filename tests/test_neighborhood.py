@@ -68,17 +68,6 @@ def test_matches_window_islands_on_real_mentions(spark, sf_dir):
     assert got == want
 
 
-def test_across_doc_scalable_equals_window(spark, sf_dir):
-    m = mentions.derive_mentions(
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    )
-    cols = ["entity_id", "type", "text", "created_by",
-            "num_docs", "num_mentions", "num_members"]
-    a = coref.across_doc_entities(m, "PERSON", scalable=False).select(cols)
-    b = coref.across_doc_entities(m, "PERSON", scalable=True).select(cols)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_merge_pred_digit_guard():
     assert merge_pred("CALLE 10", "CALLE 1O") is False  # digit runs differ
     assert merge_pred("ANA MARIA", "ANA MARIO") is True
@@ -92,7 +81,7 @@ def test_default_across_doc_has_no_single_partition_stage(spark, sf_dir):
     m = mentions.derive_mentions(
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     )
-    df = coref.across_doc_entities(m, "PERSON")  # default scalable=True
+    df = coref.across_doc_entities(m, "PERSON")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, plan[:4000]
     member = coref.across_doc_membership(m, "PERSON")

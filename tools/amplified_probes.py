@@ -5,7 +5,7 @@ probes amplify it 20-50× so the asymptotic differences between plan
 shapes become measurable wall-clock, and re-run on each round's code
 so the recorded numbers track the current implementation.
 
-Usage: python tools/amplified_probes.py [coref|asof|range|all]
+Usage: python tools/amplified_probes.py [asof|range|all]
 
 Each probe prints one line per measurement:
     PROBE <name> <seconds> <detail>
@@ -41,31 +41,6 @@ def _timed(name: str, detail: str, fn) -> float:
 
 def _noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def probe_coref(spark, reps: int = 20) -> None:
-    """20× corpus: across-doc window form vs distributed
-    sorted-neighborhood form (PLANS.md 'Single-partition sorts')."""
-    from vizlinc_ingester_spark.operators import coref, mentions
-
-    d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    amplified = d.withColumn("rep", F.explode(F.array(*[F.lit(i) for i in range(reps)])))
-    amplified = amplified.select(
-        (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"), "text"
-    ).repartition(64)
-    m = mentions.derive_mentions(amplified).persist()
-    _timed("mentions_20x", f"{m.count()} mentions", lambda: None)
-    wd = coref.within_doc_entities(m, "PERSON").persist()
-    _timed("within_doc_20x", f"{wd.count()} entities", lambda: None)
-    _timed(
-        "across_window_20x", "single-partition window form",
-        lambda: _noop(coref.across_doc_entities(m, "PERSON", wd=wd, scalable=False)),
-    )
-    _timed(
-        "across_scalable_20x", "distributed sorted-neighborhood form",
-        lambda: _noop(coref.across_doc_entities(m, "PERSON", wd=wd, scalable=True)),
-    )
-    m.unpersist(); wd.unpersist()
 
 
 def _amplified_events(spark, reps: int, dense: bool) -> DataFrame:
@@ -775,8 +750,6 @@ def probe_perceptron_avg(spark) -> None:
 def main() -> None:
     which = sys.argv[1] if len(sys.argv) > 1 else "all"
     spark = _spark()
-    if which in ("coref", "all"):
-        probe_coref(spark)
     if which in ("asof", "all"):
         probe_asof(spark)
     if which in ("range", "all"):

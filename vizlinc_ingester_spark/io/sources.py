@@ -8,9 +8,10 @@ Reference behavior being re-expressed:
   distributed and the scan is split across executors, unlike the
   reference's single-threaded walk.
 - S2 text extraction: any file -> plain text (src/TextExtractor.groovy:
-  12-28, Tika). Parity subset decodes UTF-8 bytes JVM-side; richer
-  extractors (PDF/Office) plug in as a pandas-UDF ``bytes -> text``
-  (Tika itself is not available here; the pluggable seam is the point).
+  12-28, Tika). Two tables name the extractors: JVM Column extractors
+  (UTF-8 decode, HTML, RTF) and per-row Python kernels for the
+  container formats (PDF/Office/mail/calendar), which share one
+  Arrow-batched pandas UDF. Tika itself is not available here.
 - S4 mention CSV: one row per mention, write order
   (type, start, stop, index, global_id, text)
   (src/EntityExtractor.groovy:21-33; read back src/Ingester.groovy:
@@ -65,10 +66,27 @@ def extract_text(
 ) -> DataFrame:
     """S2 — binary file rows -> documents(doc_id, name, path, text).
 
-    ``extractor='utf8'`` decodes JVM-side (whole-stage codegen, no
-    Python). Any other extractor name must be registered via
-    :func:`register_extractor` (the reference treats the Tika parser
-    as a pluggable component; so do we).
+    ``extractor`` names one entry of the two extractor tables:
+    ``utf8`` (the default), ``html`` and ``rtf`` are JVM Column
+    extractors (whole-stage codegen, no Python); the container formats
+    (``pdf``, ``docx``, ``doc``, ``eml``, ...) run their Python kernel
+    in one Arrow-batched pandas UDF. Any other name raises — Tika-class
+    parsers are external components (src/TextExtractor.groovy:6).
+    """
+    if extractor in _COLUMN_EXTRACTORS:
+        text = _COLUMN_EXTRACTORS[extractor](F.col("content"))
+    elif extractor in _CONTAINER_KERNELS:
+        text = _container_text(binary_docs, F.lit(extractor), F.col("content"))
+    else:
+        raise NotImplementedError(
+            f"extractor {extractor!r} not available; Tika-class parsers "
+            "are external components (src/TextExtractor.groovy:6)"
+        )
+    return _documents(binary_docs, text, id_offset)
+
+
+def _documents(binary_docs: DataFrame, text: "F.Column", id_offset: int) -> DataFrame:
+    """Project binary file rows onto documents(doc_id, name, path, text).
 
     doc_id is a deterministic hash of the path — stable across runs
     and shuffle-free (a row_number would serialize the listing through
@@ -79,21 +97,6 @@ def extract_text(
     docs are ~5e-4 under the birthday bound — acceptable for ids;
     callers needing certainty can key on ``path``.
     """
-    if extractor == "utf8":
-        text = F.decode(F.col("content"), "UTF-8")
-    elif extractor in _EXTRACTORS:
-        # registered extractors may be Arrow-batched pandas UDFs whose
-        # code lives in this package — ship it so executor Python
-        # workers can import it (idempotent; no-op for Column logic)
-        from ..session import ship_package
-
-        ship_package(binary_docs.sparkSession)
-        text = _EXTRACTORS[extractor](F.col("content"))
-    else:
-        raise NotImplementedError(
-            f"extractor {extractor!r} not registered; Tika-class parsers "
-            "are external components (src/TextExtractor.groovy:6)"
-        )
     return binary_docs.select(
         (F.pmod(F.xxhash64("path"), F.lit(1 << 40)) + F.lit(id_offset)).alias("doc_id"),
         F.element_at(F.split("path", "/"), -1).alias("name"),
@@ -126,31 +129,6 @@ def html_extract(content: "F.Column") -> "F.Column":
     t = F.regexp_replace(t, r"(?s)<[^>]+>", " ")
     t = xml_unescape(t)
     return F.trim(F.regexp_replace(t, r"\s+", " "))
-
-
-def pdf_extract_column(content: "F.Column") -> "F.Column":
-    """Uncompressed-subset PDF text extractor, pure Column: pulls
-    literal strings out of the text-showing operators (``(s) Tj``,
-    ``(s) '``, ``[..] TJ``) and undoes PDF string escapes. Stays in
-    whole-stage codegen — the fast path when the corpus is known to
-    carry uncompressed content streams. Decoding is ISO-8859-1 (PDF
-    bytes are not UTF-8; latin-1 is the identity byte map).
-    """
-    raw = F.decode(content, "ISO-8859-1")
-    shows = F.regexp_extract_all(raw, F.lit(_PDF_SHOW_RE), 0)
-
-    def strings_of(op: "F.Column") -> "F.Column":
-        return F.array_join(
-            F.regexp_extract_all(op, F.lit(_PDF_STR_RE), 1), ""
-        )
-
-    joined = F.array_join(F.transform(shows, strings_of), " ")
-    # PDF escapes: \\ first (via sentinel), then \( \) \n \r \t
-    s = F.replace(joined, F.lit("\\\\"), F.lit(_PDF_ESC_MARK))
-    for esc, ch in (("\\(", "("), ("\\)", ")"), ("\\n", "\n"),
-                    ("\\r", "\r"), ("\\t", "\t")):
-        s = F.replace(s, F.lit(esc), F.lit(ch))
-    return F.replace(s, F.lit(_PDF_ESC_MARK), F.lit("\\"))
 
 
 def _pdf_inflate_streams(raw: bytes) -> bytes:
@@ -199,11 +177,12 @@ _PDF_STR_PY = None
 
 
 def _pdf_text_of_bytes(b) -> str | None:
-    """Full PDF text extraction: inflate FlateDecode content streams
-    (stdlib zlib — real-world PDFs are ~all Flate-compressed), then
-    apply exactly the same text-showing-operator extraction as
-    :func:`pdf_extract_column` (same regexes, same escape order), so
-    the two paths agree byte-for-byte on the uncompressed subset.
+    """PDF text extraction for raw and Flate streams alike: inflate
+    FlateDecode content streams (stdlib zlib — real-world PDFs are ~all
+    Flate-compressed), then pull the literal strings out of the
+    text-showing operators (``(s) Tj``, ``(s) '``, ``[..] TJ``) and undo
+    PDF string escapes. Decoding is ISO-8859-1 (PDF bytes are not
+    UTF-8; latin-1 is the identity byte map).
     """
     global _PDF_SHOW_PY, _PDF_STR_PY
     import re as _re
@@ -225,23 +204,6 @@ def _pdf_text_of_bytes(b) -> str | None:
                     ("\\r", "\r"), ("\\t", "\t")):
         s = s.replace(esc, ch)
     return s.replace(_PDF_ESC_MARK, "\\")
-
-
-@F.pandas_udf(T.StringType())
-def _pdf_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_pdf_text_of_bytes)
-
-
-def pdf_extract(content: "F.Column") -> "F.Column":
-    """S2 PDF extractor (default path): handles both uncompressed and
-    ``/FlateDecode``-compressed content streams. zlib inflation is not
-    expressible in Column algebra, so this runs as an Arrow-batched
-    pandas UDF in the scan stage (no shuffle) — same machinery as
-    docx/odt. Corpora known to be uncompressed can use
-    :func:`pdf_extract_column` to stay in whole-stage codegen.
-    Reference front door: src/TextExtractor.groovy:12-28 (Tika).
-    """
-    return _pdf_extract_udf(content)
 
 
 def _pdf_bytes_of_text(text: str, compress: bool) -> bytes:
@@ -355,11 +317,6 @@ def _docx_bytes_of_text(text: str) -> bytes:
     return buf.getvalue()
 
 
-@F.pandas_udf(T.StringType())
-def _docx_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_docx_text_of_bytes)
-
-
 # --- ODT (OpenDocument text): zip + content.xml, text in <text:p>/<text:h>
 # paragraphs with nested spans — same machinery as DOCX.
 
@@ -412,22 +369,13 @@ def _odt_bytes_of_text(text: str) -> bytes:
     return buf.getvalue()
 
 
-@F.pandas_udf(T.StringType())
-def _odt_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_odt_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_odt(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _odt_bytes_of_text(t))
 
 
-def odt_extract(content: "F.Column") -> "F.Column":
-    return _odt_extract_udf(content)
-
-
 # --- RTF: text-based format, extractable with pure Column regex (JVM,
-# scan-stage, same family as html/pdf). Documented subset: character
+# scan-stage, same family as html). Documented subset: character
 # escapes (\\ \{ \}), \par/\tab/\line breaks, skip-destinations
 # ({\*\...} without nested braces), control-word stripping. Nested
 # destination groups (\fonttbl with embedded groups) need a real
@@ -946,23 +894,9 @@ def _ppt_bytes_of_text(text: str) -> bytes:
     return _cfb_bytes({"PowerPoint Document": doc})
 
 
-@F.pandas_udf(T.StringType())
-def _xls_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_xls_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_xls(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _xls_bytes_of_text(t))
-
-
-def xls_extract(content: "F.Column") -> "F.Column":
-    return _xls_extract_udf(content)
-
-
-@F.pandas_udf(T.StringType())
-def _ppt_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_ppt_text_of_bytes)
 
 
 @F.pandas_udf(T.BinaryType())
@@ -970,31 +904,14 @@ def render_ppt(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _ppt_bytes_of_text(t))
 
 
-def ppt_extract(content: "F.Column") -> "F.Column":
-    return _ppt_extract_udf(content)
-
-
-@F.pandas_udf(T.StringType())
-def _doc_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_doc_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_doc(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _doc_bytes_of_text(t))
 
 
-def doc_extract(content: "F.Column") -> "F.Column":
-    return _doc_extract_udf(content)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_docx(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _docx_bytes_of_text(t))
-
-
-def docx_extract(content: "F.Column") -> "F.Column":
-    return _docx_extract_udf(content)
 
 
 # --- XLSX / PPTX (OOXML zip containers, same machinery as DOCX) -----------
@@ -1122,32 +1039,14 @@ def _pptx_bytes_of_text(text: str) -> bytes:
     return buf.getvalue()
 
 
-@F.pandas_udf(T.StringType())
-def _xlsx_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_xlsx_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_xlsx(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _xlsx_bytes_of_text(t))
 
 
-def xlsx_extract(content: "F.Column") -> "F.Column":
-    return _xlsx_extract_udf(content)
-
-
-@F.pandas_udf(T.StringType())
-def _pptx_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_pptx_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_pptx(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _pptx_bytes_of_text(t))
-
-
-def pptx_extract(content: "F.Column") -> "F.Column":
-    return _pptx_extract_udf(content)
 
 
 # --- .epub (EPUB 2/3: zip + OPF manifest/spine) -----------------------------
@@ -1296,18 +1195,9 @@ def _epub_bytes_of_text(text: str) -> bytes:
     return buf.getvalue()
 
 
-@F.pandas_udf(T.StringType())
-def _epub_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_epub_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_epub(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _epub_bytes_of_text(t))
-
-
-def epub_extract(content: "F.Column") -> "F.Column":
-    return _epub_extract_udf(content)
 
 
 # --- .msg (Outlook item: CFB container with MAPI property streams) ----------
@@ -1347,18 +1237,9 @@ def _msg_bytes_of_text(text: str) -> bytes:
     return _cfb_bytes({"__substg1.0_1000001F": text.encode("utf-16-le")})
 
 
-@F.pandas_udf(T.StringType())
-def _msg_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_msg_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_msg(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _msg_bytes_of_text(t))
-
-
-def msg_extract(content: "F.Column") -> "F.Column":
-    return _msg_extract_udf(content)
 
 
 # --- .eml (RFC-5322 email message) ------------------------------------------
@@ -1368,8 +1249,8 @@ def _eml_text_of_bytes(b) -> str | None:
     """Subject + body of a plain RFC-5322 message. Documented subset:
     single-part messages (no MIME multipart/transfer-encoding —
     the renderer below emits exactly this subset; real-world MIME
-    mail would route through a fuller parser behind the same
-    registry seam). Header folding (continuation lines) handled."""
+    mail would need a fuller kernel). Header folding (continuation
+    lines) handled."""
     if b is None:
         return None
     raw = bytes(b)
@@ -1416,18 +1297,9 @@ def _eml_bytes_of_text(text: str) -> bytes:
     )
 
 
-@F.pandas_udf(T.StringType())
-def _eml_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_eml_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_eml(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _eml_bytes_of_text(t))
-
-
-def eml_extract(content: "F.Column") -> "F.Column":
-    return _eml_extract_udf(content)
 
 
 # --- .ics / .vcf (RFC 5545 iCalendar / RFC 6350 vCard) -----------------------
@@ -1546,8 +1418,7 @@ def _ics_text_of_bytes(b) -> str | None:
     components (VALARM) skipped (ADVICE r11: an unscoped lookup
     returned a preceding VALARM/VTODO/VJOURNAL DESCRIPTION on
     real-world calendars). Documented subset: one text-bearing
-    property; fuller calendars route through the same registry
-    seam."""
+    property; fuller calendars would need a fuller kernel."""
     if b is None:
         return None
     lines = _ical_unfold(bytes(b).decode("utf-8", "replace"))
@@ -1619,32 +1490,14 @@ def _vcf_bytes_of_text(text: str) -> bytes:
     return body.encode("utf-8")
 
 
-@F.pandas_udf(T.StringType())
-def _ics_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_ics_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_ics(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _ics_bytes_of_text(t))
 
 
-def ics_extract(content: "F.Column") -> "F.Column":
-    return _ics_extract_udf(content)
-
-
-@F.pandas_udf(T.StringType())
-def _vcf_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_vcf_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_vcf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _vcf_bytes_of_text(t))
-
-
-def vcf_extract(content: "F.Column") -> "F.Column":
-    return _vcf_extract_udf(content)
 
 
 # --- .mbox (RFC 4155 mailbox, mboxrd quoting) --------------------------------
@@ -1708,44 +1561,57 @@ def _mbox_bytes_of_text(text: str) -> bytes:
     )
 
 
-@F.pandas_udf(T.StringType())
-def _mbox_extract_udf(content: pd.Series) -> pd.Series:
-    return content.map(_mbox_text_of_bytes)
-
-
 @F.pandas_udf(T.BinaryType())
 def render_mbox(text: pd.Series) -> pd.Series:
     return text.map(lambda t: None if t is None else _mbox_bytes_of_text(t))
 
 
-def mbox_extract(content: "F.Column") -> "F.Column":
-    return _mbox_extract_udf(content)
-
-
-_EXTRACTORS: dict = {
+#: JVM extractors: ``content`` Column -> text Column, evaluated in
+#: whole-stage codegen without crossing into Python
+_COLUMN_EXTRACTORS: dict = {
+    "utf8": lambda content: F.decode(content, "UTF-8"),
     "html": html_extract,
-    "pdf": pdf_extract,
-    "pdf_uncompressed": pdf_extract_column,
-    "docx": docx_extract,
-    "odt": odt_extract,
     "rtf": rtf_extract,
-    "doc": doc_extract,
-    "xls": xls_extract,
-    "ppt": ppt_extract,
-    "xlsx": xlsx_extract,
-    "pptx": pptx_extract,
-    "epub": epub_extract,
-    "msg": msg_extract,
-    "eml": eml_extract,
-    "ics": ics_extract,
-    "vcf": vcf_extract,
-    "mbox": mbox_extract,
+}
+
+#: per-row Python kernels ``bytes -> str | None`` for the container
+#: formats (zip/CFB/Flate inflation and binary record walks are not
+#: expressible in Column algebra); one Arrow-batched UDF runs them all
+_CONTAINER_KERNELS: dict = {
+    "pdf": _pdf_text_of_bytes,
+    "docx": _docx_text_of_bytes,
+    "odt": _odt_text_of_bytes,
+    "doc": _doc_text_of_bytes,
+    "xls": _xls_text_of_bytes,
+    "ppt": _ppt_text_of_bytes,
+    "xlsx": _xlsx_text_of_bytes,
+    "pptx": _pptx_text_of_bytes,
+    "epub": _epub_text_of_bytes,
+    "msg": _msg_text_of_bytes,
+    "eml": _eml_text_of_bytes,
+    "ics": _ics_text_of_bytes,
+    "vcf": _vcf_text_of_bytes,
+    "mbox": _mbox_text_of_bytes,
 }
 
 
-def register_extractor(name: str, fn) -> None:
-    """Register a ``Column -> Column`` (or pandas-UDF) text extractor."""
-    _EXTRACTORS[name] = fn
+@F.pandas_udf(T.StringType())
+def _container_extract_udf(fmt: pd.Series, content: pd.Series) -> pd.Series:
+    """Run each row's format kernel; a NULL ``content`` (a row routed
+    to a JVM extractor) stays NULL without a kernel call."""
+    return pd.Series(
+        [None if b is None else _CONTAINER_KERNELS[f](b) for f, b in zip(fmt, content)],
+        dtype=object,
+    )
+
+
+def _container_text(binary_docs: DataFrame, fmt, content) -> "F.Column":
+    from ..session import ship_package
+
+    # the kernels live in this package — ship it so executor Python
+    # workers can import it (idempotent)
+    ship_package(binary_docs.sparkSession)
+    return _container_extract_udf(fmt, content)
 
 
 #: file extension -> extractor name for the auto front door
@@ -1764,29 +1630,26 @@ def extract_text_auto(binary_docs: DataFrame, id_offset: int = 0) -> DataFrame:
     """S2 auto front door: route each file to its extractor by
     extension — the reference hands EVERY file to Tika and lets it
     sniff (src/TextExtractor.groovy:12-28); here routing is explicit
-    so each format's subset stays documented. Files split into
-    per-extension partitions of one scan and each slice runs its own
-    extractor (a plain union — NOT a when-chain over UDF branches,
-    which would evaluate every pandas UDF on every row). Unknown
-    extensions fall back to UTF-8 decode, like Tika's text heuristic.
-    Rows whose extractor returns NULL (wrong container) keep the NULL
-    so callers can audit failures."""
+    so each format's subset stays documented. Unknown extensions fall
+    back to UTF-8 decode, like Tika's text heuristic.
+
+    One projection over one scan: the JVM extractors are a CASE chain
+    (only the matching branch runs), and the container UDF sits in
+    the ELSE branch. Spark hoists a Python UDF out of any conditional
+    and evaluates it on every row, so the UDF is fed NULL for rows
+    that a JVM extractor handles — txt/html/rtf bytes never cross
+    into Python. Rows whose extractor returns NULL (wrong container)
+    keep the NULL so callers can audit failures."""
     ext = F.lower(F.element_at(F.split("path", r"\."), -1))
-    tagged = binary_docs.withColumn("__ext", ext)
-    parts = []
-    routed = sorted(set(_EXT_ROUTES.values()))
-    for extractor in routed:
-        exts = [e for e, x in _EXT_ROUTES.items() if x == extractor]
-        part = tagged.filter(F.col("__ext").isin(*exts)).drop("__ext")
-        parts.append(extract_text(part, extractor=extractor, id_offset=id_offset))
-    fallback = tagged.filter(
-        ~F.col("__ext").isin(*list(_EXT_ROUTES))
-    ).drop("__ext")
-    parts.append(extract_text(fallback, extractor="utf8", id_offset=id_offset))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    routes = F.create_map(*[F.lit(x) for kv in _EXT_ROUTES.items() for x in kv])
+    fmt = F.coalesce(F.try_element_at(routes, ext), F.lit("utf8"))
+    is_container = fmt.isin(*_CONTAINER_KERNELS)
+    text = _container_text(
+        binary_docs, F.when(is_container, fmt), F.when(is_container, F.col("content"))
+    )
+    for name, extract in _COLUMN_EXTRACTORS.items():
+        text = F.when(fmt == name, extract(F.col("content"))).otherwise(text)
+    return _documents(binary_docs, text, id_offset)
 
 
 def read_mentions_csv(spark: SparkSession, path: str) -> DataFrame:

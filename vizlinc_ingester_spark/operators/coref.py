@@ -284,11 +284,33 @@ def assign_mentions_to_entities(
     )
 
 
+def _strong_clusters(
+    mentions: DataFrame, entity_type: str, wd: DataFrame | None
+) -> tuple[DataFrame, DataFrame]:
+    """Shared preamble of the across-doc pass: the within-doc entities
+    (``wd``, or a fresh within-doc pass) with ``norm`` and ``strong``
+    columns, and the strong candidates clustered corpus-wide by
+    operators/neighborhood.sorted_neighborhood_clusters (distributed
+    range sort + boundary stitching — no single-partition stage, the
+    shape that survives 100 TB) with ``cluster_seq`` as cluster id."""
+    from .neighborhood import sorted_neighborhood_clusters
+
+    if wd is None:
+        wd = within_doc_entities(mentions, entity_type)
+    wd = wd.withColumnRenamed("text", "norm")
+    wd = wd.withColumn("strong", is_strong_candidate(F.col("norm"), entity_type))
+    # the within-pass output carries its own cluster_seq; replace it
+    strong = sorted_neighborhood_clusters(
+        wd.filter(F.col("strong")).drop("cluster_seq"),
+        ["type", "strong"], "norm", "entity_id",
+    ).withColumnRenamed("cluster_id", "cluster_seq")
+    return wd, strong
+
+
 def across_doc_entities(
     mentions: DataFrame,
     entity_type: str,
     wd: DataFrame | None = None,
-    scalable: bool = True,
 ) -> DataFrame:
     """Across-document coref (src/AcrossDocPerCoref.groovy:46-117).
 
@@ -297,32 +319,8 @@ def across_doc_entities(
     weak: exact-match grouping only, unfiltered, created_by
     'weak_across_doc_*_coref'. Input entities are the within-doc pass
     output (pass ``wd`` to reuse a checkpointed one).
-
-    ``scalable=True`` (default): the corpus-wide sorted-neighborhood
-    clustering runs via operators/neighborhood.sorted_neighborhood_clusters
-    (distributed range sort + boundary stitching) — no single-partition
-    stage anywhere; the shape that survives 100 TB, and identical
-    output to the window form (tests/test_neighborhood.py + driver
-    hash gate). ``scalable=False``: the same clustering as a window
-    over the (type, strong) scope — the scope has ~1 distinct value,
-    so the sort funnels through one partition; kept as the labeled
-    small-scope baseline (fine to ~10^7 candidates).
     """
-    if wd is None:
-        wd = within_doc_entities(mentions, entity_type)
-    wd = wd.withColumnRenamed("text", "norm")
-    wd = wd.withColumn("strong", is_strong_candidate(F.col("norm"), entity_type))
-
-    strong_in = wd.filter(F.col("strong"))
-    if scalable:
-        from .neighborhood import sorted_neighborhood_clusters
-
-        # the within-pass output carries its own cluster_seq; replace it
-        strong = sorted_neighborhood_clusters(
-            strong_in.drop("cluster_seq"), ["type", "strong"], "norm", "entity_id"
-        ).withColumnRenamed("cluster_id", "cluster_seq")
-    else:
-        strong = _islands(strong_in, ["type", "strong"], "norm", "entity_id")
+    wd, strong = _strong_clusters(mentions, entity_type, wd)
     # member-count filter (F7): reference drops clusters with fewer
     # than MIN_NUM_DOCS *members* (src/AcrossDocPerCoref.groovy:97-107);
     # num_members rides out of the synthesize aggregation — no second
@@ -369,29 +367,13 @@ def across_doc_membership(
     mentions: DataFrame,
     entity_type: str,
     wd: DataFrame | None = None,
-    scalable: bool = True,
 ) -> DataFrame:
     """(doc_id, within_entity_id, across_entity_id) for surviving
     *strong* across-doc clusters — the rewired doc->entity edges the
     reference leaves in the graph after mergeClusters
     (src/CorefBase.groovy:243-252). Feeds the social network (G2).
-
-    ``scalable`` as in :func:`across_doc_entities` — default is the
-    distributed sorted-neighborhood form (no single-partition window).
     """
-    if wd is None:
-        wd = within_doc_entities(mentions, entity_type)
-    wd = wd.withColumnRenamed("text", "norm")
-    wd = wd.withColumn("strong", is_strong_candidate(F.col("norm"), entity_type))
-    strong_in = wd.filter(F.col("strong"))
-    if scalable:
-        from .neighborhood import sorted_neighborhood_clusters
-
-        strong = sorted_neighborhood_clusters(
-            strong_in.drop("cluster_seq"), ["type", "strong"], "norm", "entity_id"
-        ).withColumnRenamed("cluster_id", "cluster_seq")
-    else:
-        strong = _islands(strong_in, ["type", "strong"], "norm", "entity_id")
+    _, strong = _strong_clusters(mentions, entity_type, wd)
     member_counts = strong.groupBy("type", "strong", "cluster_seq").agg(
         F.count(F.lit(1)).alias("num_members"),
         F.min("entity_id").alias("across_entity_id"),

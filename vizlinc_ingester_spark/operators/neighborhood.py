@@ -33,8 +33,8 @@ to executor workers):
 
 Semantics are byte-identical to the single-partition window form
 (verified by tests/test_neighborhood.py on the real mention data and
-by the driver hash gate: `across_doc_entities_person_scalable` shares
-its oracle with the window form). The Python ``merge_pred`` below is
+by the oracle hash gate on `across_doc_entities_person`, whose oracle
+clusters with a window). The Python ``merge_pred`` below is
 the driver-side/stitching twin of the Column predicate; the parity
 test pins them together.
 """

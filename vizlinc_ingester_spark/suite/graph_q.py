@@ -159,19 +159,26 @@ def q_sn_pagerank(spark, sf_dir):
 
 
 def _pagerank_oracle() -> str:
+    # Each r{i+1} reads r{i}, deg and bi; if the planner inlines CTEs
+    # the tree re-expands every earlier round (and the coref prelude
+    # under sn_edges) per round — DuckDB ran out of memory planning
+    # the 6-round form. MATERIALIZED pins each CTE once, as in
+    # _kcore_oracle.
     parts = [
         f"""
-bi AS (SELECT src_entity_id AS u, dst_entity_id AS v FROM sn_edges
+bi AS MATERIALIZED (
+       SELECT src_entity_id AS u, dst_entity_id AS v FROM sn_edges
        UNION ALL SELECT dst_entity_id AS u, src_entity_id AS v FROM sn_edges),
-deg AS (SELECT u AS entity_id, CAST(count(*) AS BIGINT) AS deg FROM bi GROUP BY u),
-nn AS (SELECT count(*) AS c FROM deg),
-r0 AS (SELECT entity_id, CAST({PR_SCALE} // c AS BIGINT) AS rank
+deg AS MATERIALIZED (
+       SELECT u AS entity_id, CAST(count(*) AS BIGINT) AS deg FROM bi GROUP BY u),
+nn AS MATERIALIZED (SELECT count(*) AS c FROM deg),
+r0 AS MATERIALIZED (SELECT entity_id, CAST({PR_SCALE} // c AS BIGINT) AS rank
        FROM deg CROSS JOIN nn)"""
     ]
     for i in range(PR_ITERS):
         parts.append(
             f"""
-r{i + 1} AS (
+r{i + 1} AS MATERIALIZED (
   SELECT d.entity_id,
          CAST(({PR_SCALE} * {PR_DAMP_DEN - PR_DAMP_NUM}) // ({PR_DAMP_DEN} * nn.c)
               + ({PR_DAMP_NUM} * coalesce(cb.s, 0)) // {PR_DAMP_DEN}

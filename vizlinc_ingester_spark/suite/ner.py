@@ -2052,8 +2052,8 @@ ORACLES["ner_perceptron_avg"] = _materialize_ctes(
 # so every weight stays exact int64 (micro-nats): no exp, no floats
 # beyond the one floor(1e6*ln) discipline the HMM family already
 # gates. STEP calibrates the count-space update to the micro-nat
-# scale — the measured ladder (tools/probe_norm_perceptron.py, sf0.01
-# held half, HMM baseline 0.9335):
+# scale — the measured ladder (sf0.01 held half, HMM baseline
+# 0.9335; also recorded in PLANS.md, round 13):
 #
 #     STEP    E=1     E=2     E=3     E=4
 #     200    0.9323  0.9330  0.9312  0.9367   <- stable regime

@@ -134,19 +134,18 @@ def q_extract_text_formats(spark, sf_dir):
     escaped+folded DESCRIPTION, .vcf as an RFC-6350 vCard NOTE under
     the same line grammar, and .mbox as an RFC-4155 mailbox with
     mboxrd From-quoting — all three exact round-trips, no whitespace
-    collapse), then
-    run the real ``extract_text`` path per format and union. The oracle is the identity (modulo whitespace collapse
-    for the markup formats) — a hash match proves every
+    collapse), then send the rendered ``(path, content)`` rows through
+    the real front door, ``extract_text_auto``, which routes each row
+    by extension. The oracle is the identity (modulo whitespace
+    collapse for the markup formats) — a hash match proves every
     encode->extract round-trip is exact, i.e. the extractors actually
     invert the formats (the reference's Tika front door,
     src/TextExtractor.groovy:12-28: "Microsoft Office files, PDF,
     plaintext, XML and many other formats")."""
-    from ..io.sources import extract_text, rtf_render
-    from ..session import ship_package
+    from ..io import sources as _src
+    from ..session import read_table, ship_package
 
     ship_package(spark)
-    from ..session import read_table
-
     d = read_table(spark, os.path.join(sf_dir, "documents.parquet"))
     esc_html = F.replace(
         F.replace(
@@ -171,93 +170,45 @@ def q_extract_text_formats(spark, sf_dir):
         esc_html,
         F.lit("</p></body></html>"),
     )
-    # Renders are per-format FILTERED SLICES, NOT a when-chain over
-    # pandas-UDF renderers: Spark hoists each ArrowEvalPython node out
-    # of a conditional and evaluates it on EVERY row, so the when-chain
-    # form ran all ~11 container renderers over the full corpus and
-    # discarded 13/14 of the work (the same hazard extract_text_auto
-    # documents on the extract side; r11 review).
-    #
-    # r14 optimization (guide §4.1/§4.2 — cross the Python boundary
-    # once, not 14 times): the per-slice form planned 14 SEPARATE
-    # ArrowEvalPython subtrees (one render + one extract node per
-    # binary format) over 17 scans of the same parquet — 28 Python
-    # crossings per action (plans/r14/extract_text_formats_before.txt).
-    # The 14 binary formats now run as ONE mapInPandas pass over ONE
-    # filtered scan, dispatching per row to the IDENTICAL per-row
-    # kernels the registered extractors wrap (_pdf_bytes_of_text /
-    # _pdf_text_of_bytes etc. — the render->extract round-trip is
-    # byte-for-byte the same); the 3 Column-expression formats
-    # (txt/html/rtf) keep their pure-JVM branches through the real
-    # ``extract_text`` front door. 17 scans + 28 Python nodes ->
-    # 4 scans + 1 MapInPandas.
-    from ..io import sources as _src
+    # Layout: one parquet scan -> one mapInPandas render pass -> the
+    # one-projection extract_text_auto (one ArrowEvalPython node). The
+    # three JVM formats (txt/html/rtf) render as a JVM CASE chain; the
+    # 14 container formats render in the single mapInPandas pass, NOT
+    # as a when-chain over the render_<fmt> pandas UDFs, which Spark
+    # would hoist out of the conditional and run on every row.
+    jvm_content = (
+        F.when(fmt == "txt", F.encode(F.col("text"), "UTF-8"))
+        .when(fmt == "html", F.encode(html_doc, "UTF-8"))
+        .when(fmt == "rtf", F.encode(_src.rtf_render(F.col("text")), "UTF-8"))
+    )
+    files = d.select(
+        F.concat(
+            F.lit("mem://corpus/"), F.col("doc_id").cast("string"),
+            F.lit("."), fmt,
+        ).alias("path"),
+        fmt.alias("fmt"), "doc_id", "text", jvm_content.alias("content"),
+    )
 
-    tagged = d.withColumn("__fmt", fmt)
-    parts = []
-    for f, x in (("txt", "utf8"), ("html", "html"), ("rtf", "rtf")):
-        render = {
-            "txt": F.encode(F.col("text"), "UTF-8"),
-            "html": F.encode(html_doc, "UTF-8"),
-            "rtf": F.encode(rtf_render(F.col("text")), "UTF-8"),
-        }[f]
-        files = tagged.filter(F.col("__fmt") == f).select(
-            F.concat(
-                F.lit("mem://corpus/"), F.col("doc_id").cast("string"),
-                F.lit("."), F.col("__fmt"),
-            ).alias("path"),
-            render.alias("content"),
-        )
-        parts.append(extract_text(files, extractor=x).select("name", "text"))
-
-    _kernels = {
-        # text -> container bytes -> extracted text, same kernels the
-        # registered pandas-UDF extractors call row-by-row
-        "pdf": lambda t, d: _src._pdf_text_of_bytes(
+    def render(f: str, t: str, doc_id: int) -> bytes:
+        if f == "pdf":
             # half Flate-compressed (doc_id % 34 == 2), half
             # uncompressed (== 19): one gate proves both branches
-            _src._pdf_bytes_of_text(t, d % 34 == 2)
-        ),
-        "docx": lambda t, d: _src._docx_text_of_bytes(_src._docx_bytes_of_text(t)),
-        "odt": lambda t, d: _src._odt_text_of_bytes(_src._odt_bytes_of_text(t)),
-        "doc": lambda t, d: _src._doc_text_of_bytes(_src._doc_bytes_of_text(t)),
-        "xls": lambda t, d: _src._xls_text_of_bytes(_src._xls_bytes_of_text(t)),
-        "ppt": lambda t, d: _src._ppt_text_of_bytes(_src._ppt_bytes_of_text(t)),
-        "xlsx": lambda t, d: _src._xlsx_text_of_bytes(_src._xlsx_bytes_of_text(t)),
-        "pptx": lambda t, d: _src._pptx_text_of_bytes(_src._pptx_bytes_of_text(t)),
-        "epub": lambda t, d: _src._epub_text_of_bytes(_src._epub_bytes_of_text(t)),
-        "msg": lambda t, d: _src._msg_text_of_bytes(_src._msg_bytes_of_text(t)),
-        "eml": lambda t, d: _src._eml_text_of_bytes(_src._eml_bytes_of_text(t)),
-        "ics": lambda t, d: _src._ics_text_of_bytes(_src._ics_bytes_of_text(t)),
-        "vcf": lambda t, d: _src._vcf_text_of_bytes(_src._vcf_bytes_of_text(t)),
-        "mbox": lambda t, d: _src._mbox_text_of_bytes(_src._mbox_bytes_of_text(t)),
-    }
+            return _src._pdf_bytes_of_text(t, doc_id % 34 == 2)
+        return getattr(_src, f"_{f}_bytes_of_text")(t)
 
-    def roundtrip(batches):
-        import pandas as pd
-
+    def render_containers(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            names, texts = [], []
-            for doc_id, f, t in zip(
-                pdf["doc_id"], pdf["__fmt"], pdf["text"]
-            ):
-                names.append(f"{doc_id}.{f}")
-                texts.append(
-                    None if t is None else _kernels[f](t, int(doc_id))
+            pdf["content"] = [
+                render(f, t, int(i))
+                if f in _src._CONTAINER_KERNELS and t is not None else c
+                for f, t, i, c in zip(
+                    pdf["fmt"], pdf["text"], pdf["doc_id"], pdf["content"]
                 )
-            yield pd.DataFrame({"name": names, "text": texts})
+            ]
+            yield pdf[["path", "content"]]
 
-    binary = (
-        tagged.filter(F.col("__fmt").isin(*_kernels))
-        .select("doc_id", "__fmt", "text")
-        .mapInPandas(roundtrip, "name string, text string")
-    )
-    out = binary
-    for p in parts:
-        out = out.unionByName(p)
-    return out.select("name", "text")
+    rendered = files.mapInPandas(render_containers, "path string, content binary")
+    return _src.extract_text_auto(rendered).select("name", "text")
 
 
 ORACLE_EXTRACT_TEXT = r"""

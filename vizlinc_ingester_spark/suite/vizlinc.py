@@ -349,7 +349,7 @@ def q_adjacent_close_pairs(spark, sf_dir):
     this operator at scale is the distributed range-sort form in
     ``operators/neighborhood.py`` (range-partitioned sort + boundary
     row exchange), used by ``within_doc_entities_person_merged`` and
-    ``across_doc_entities_person(_scalable)`` — same convention as
+    ``across_doc_entities_person`` — same convention as
     the coref operators."""
     nm = coref.normalized_mentions(derived_mentions(spark, sf_dir), "PERSON")
     names = nm.select("norm").distinct()
@@ -519,21 +519,6 @@ def q_dict_ner_tokenjoin(spark, sf_dir):
     )
 
 
-def q_across_doc_entities_person_scalable(spark, sf_dir):
-    """Across-doc PERSON coref on the distributed sorted-neighborhood
-    path (operators/neighborhood.py): range-shuffle sort + boundary
-    stitching instead of the single-partition (type, strong) window.
-    Same oracle as across_doc_entities_person — a hash match proves the
-    100 TB shape computes the identical clustering."""
-    return coref.across_doc_entities(
-        derived_mentions(spark, sf_dir), "PERSON",
-        wd=wd_entities(spark, sf_dir, "PERSON"),
-        scalable=True,
-    ).select(
-        "entity_id", "type", "text", "created_by", "num_docs", "num_mentions", "num_members"
-    )
-
-
 def q_within_doc_entities_person_simple(spark, sf_dir):
     """4th coref variant, within-doc half (simple/twitter coref,
     src/WithinDocSimpleCoref.groovy:38-74): twitter-normalize + exact
@@ -582,7 +567,9 @@ QUERIES = {
     "within_doc_entities_person_merged": q_within_doc_entities_person_merged,
     "dict_ner": q_dict_ner,
     "dict_ner_tokenjoin": q_dict_ner_tokenjoin,
-    "across_doc_entities_person_scalable": q_across_doc_entities_person_scalable,
+    # alias: across-doc coref has one implementation (the distributed
+    # sorted-neighborhood form); the name stays declared and gated
+    "across_doc_entities_person_scalable": q_across_doc_entities_person,
     "within_doc_entities_person_simple": q_within_doc_entities_person_simple,
     "across_doc_entities_person_simple": q_across_doc_entities_person_simple,
 }
@@ -775,15 +762,6 @@ SELECT doc_id, norm, idx FROM (
     "within_doc_entities_person_merged": _oracle_within_merged(),
     "dict_ner": ORACLE_DICT_NER,
     "dict_ner_tokenjoin": ORACLE_DICT_NER,
-    # identical oracle as the window-based across pass: the scalable
-    # path must compute the same clustering bit-for-bit
-    "across_doc_entities_person_scalable": w(
-        "SELECT entity_id, type, text, created_by, num_docs,"
-        " num_mentions, num_members FROM across_strong_PERSON"
-        " UNION ALL SELECT entity_id, type, text, created_by,"
-        " num_docs, num_mentions, num_members FROM across_weak_PERSON",
-        PERSON,
-    ),
     "within_doc_entities_person_simple": w(_SQL_WD_SIMPLE, PERSON),
     "across_doc_entities_person_simple": w(
         "SELECT CAST(min(entity_id) AS BIGINT) AS entity_id, type, text,"
@@ -798,3 +776,4 @@ SELECT doc_id, norm, idx FROM (
         PERSON,
     ),
 }
+ORACLES["across_doc_entities_person_scalable"] = ORACLES["across_doc_entities_person"]
