@@ -125,3 +125,26 @@ def test_guard_trips_on_nonscalar_single_partition(spark):
     assert "Exchange SinglePartition" in plan, plan
     with pytest.raises(AssertionError, match="non-scalar"):
         assert_plan_shape("synthetic_bad", plan)
+
+
+def test_sketch_defaults_plan_numpy_kernels(spark, sf_dir):
+    """MinHash-LSH and SimHash near-dup detection, called with default
+    arguments as plans/curate.py does, plan their signatures as an
+    Arrow-batched MapInPandas node, never as a per-element
+    aggregate/zip_with Column fold."""
+    import os
+
+    from vizlinc_ingester_spark.operators import dedup as dd
+
+    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+        "doc_id", "text"
+    )
+    for name, out in (
+        ("minhash_lsh_verified", dd.minhash_lsh_verified(d)),
+        ("simhash_near_dups", dd.simhash_near_dups(d)),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan, f"{name}\n" + plan[:4000]
+        assert "zip_with" not in plan and "aggregate(" not in plan, (
+            f"{name}\n" + plan[:4000]
+        )

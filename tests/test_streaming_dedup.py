@@ -67,12 +67,7 @@ def test_streaming_lsh_insert_equals_batch_banding(spark, sf_dir):
     docs = spark.read.parquet(
         os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id", "text")
-    hs = dd.hashed_shingle_docs(docs)
-    sigs = dd._sig_to_cols(
-        hs.select(
-            "doc_id", dd.minhash_signature_array(F.col("hs")).alias("sig")
-        )
-    )
+    sigs = dd.minhash_signatures(docs)
     bands = dd.lsh_band_buckets(sigs)
     sizes = bands.groupBy("band_key").agg(
         F.count(F.lit(1)).cast("long").alias("n_bucket")
@@ -122,12 +117,7 @@ def test_streaming_lsh_compact_equals_batch_store(spark, sf_dir):
     docs = spark.read.parquet(
         os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id", "text")
-    hs = dd.hashed_shingle_docs(docs)
-    sigs = dd._sig_to_cols(
-        hs.select(
-            "doc_id", dd.minhash_signature_array(F.col("hs")).alias("sig")
-        )
-    )
+    sigs = dd.minhash_signatures(docs)
     mh_cols = [f"mh{i}" for i in range(dd.N_PERMS)]
     reps = sigs.groupBy(*mh_cols).agg(
         F.min("doc_id").alias("rep"),
@@ -199,17 +189,9 @@ def test_compact_lsh_store_is_batch_count_agnostic(spark, sf_dir):
     ).select("doc_id", "text")
     mh_cols = [f"mh{i}" for i in range(dd.N_PERMS)]
 
-    def sigs_of(d):
-        hs = dd.hashed_shingle_docs(d)
-        return dd._sig_to_cols(
-            hs.select(
-                "doc_id", dd.minhash_signature_array(F.col("hs")).alias("sig")
-            )
-        )
-
     bands_parts, members_parts = [], []
     for b in range(4):
-        sigs = sigs_of(docs.filter(F.col("doc_id") % 4 == b))
+        sigs = dd.minhash_signatures(docs.filter(F.col("doc_id") % 4 == b))
         reps = sigs.groupBy(*mh_cols).agg(
             F.min("doc_id").alias("rep"),
             F.count(F.lit(1)).cast("long").alias("n_members"),
@@ -235,7 +217,7 @@ def test_compact_lsh_store_is_batch_count_agnostic(spark, sf_dir):
         map(tuple, compact_lsh_store(bands, members).collect())
     )
 
-    sigs_all = sigs_of(docs)
+    sigs_all = dd.minhash_signatures(docs)
     reps_all = sigs_all.groupBy(*mh_cols).agg(
         F.min("doc_id").alias("rep"),
         F.count(F.lit(1)).cast("long").alias("n_members"),

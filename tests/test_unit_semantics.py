@@ -158,7 +158,7 @@ def test_training_manifest_positions_contiguous(spark, sf_dir):
 
 def test_kmeans_empty_cluster_drops(spark):
     """A seed centroid that attracts no vectors after round 1 must
-    disappear from later rounds (both engines share this algebra).
+    disappear from later rounds (the DuckDB oracle has the same algebra).
     Force it deterministically: seed KMEANS_K-1 is an exact duplicate
     of seed 0, so in round 1 it ties (dist 0) with cluster 0 and the
     (dist, cluster_id) tie-break assigns BOTH copies to cluster 0 —
@@ -196,19 +196,33 @@ def test_kmeans_empty_cluster_drops(spark):
     assert KMEANS_K - 1 not in set(out.cluster_id)
 
 
-def test_kmeans_vec_twin_bit_identical(spark, sf_dir):
-    """The numpy-vectorized k-means twin must be BIT-identical to the
-    Column form (they share one oracle; this pins them to each other
-    directly, the minhash_signatures_vec discipline)."""
-    from vizlinc_ingester_spark.suite.similarity import (
-        q_kmeans_clusters,
-        q_kmeans_clusters_vec,
-    )
+def test_kmeans_empty_seed_set_emits_no_rows(spark, tmp_path):
+    """With no seed vector (no vec_id < KMEANS_K) there are no
+    centroids, so both k-means names must return the oracle's empty
+    result, not a made-up cluster 0 holding every row."""
+    import numpy as np
+    import pandas as pd
 
-    a = q_kmeans_clusters(spark, sf_dir).toPandas()
-    b = q_kmeans_clusters_vec(spark, sf_dir).toPandas()
-    key = lambda df: sorted(map(tuple, df[sorted(df.columns)].values.tolist()))  # noqa: E731
-    assert key(a) == key(b)
+    from tests.oracle_harness import duck_con
+    from vizlinc_ingester_spark.suite.similarity import ORACLES, QUERIES
+
+    rng = np.random.RandomState(3)
+    df = pd.DataFrame({
+        "vec_id": range(100, 160),
+        "embedding": [
+            rng.uniform(-1, 1, 8).astype("float32").tolist() for _ in range(60)
+        ],
+        "label": 0,
+    })
+    df.to_parquet(tmp_path / "embeddings.parquet")
+    con = duck_con(str(tmp_path))
+    try:
+        for name in ("kmeans_clusters", "kmeans_clusters_vec"):
+            want = len(con.execute(ORACLES[name]).fetchdf())
+            assert want == 0
+            assert QUERIES[name](spark, str(tmp_path)).count() == want, name
+    finally:
+        con.close()
 
 
 def test_index_freshness_and_gc(tmp_path):
@@ -520,25 +534,3 @@ def test_bpe_local_learning_matches_distributed(spark, monkeypatch):
     distributed = bpe.learn_bpe_merges(words, n_merges)
     assert local == distributed
     assert len(local) == n_merges
-
-
-def test_kmeans_vec_trained_centroids_are_memoized(spark, sf_dir):
-    """r14: q_kmeans_clusters_vec memoizes its TRAINED final-round
-    centroid arrays (the _pq_train trained-artifact stance) so warm
-    invocations pay only the final assignment pass. Pin the
-    internals: the memo entry exists after a call, and a second call
-    returns bit-identical rows from the memoized arrays."""
-    from vizlinc_ingester_spark import session as S
-    from vizlinc_ingester_spark.suite.similarity import (
-        q_kmeans_clusters_vec,
-    )
-
-    a = q_kmeans_clusters_vec(spark, sf_dir).toPandas()
-    per = S._PLAN_MEMO.get(spark, {})
-    keys = [k for k in per if "kmeans_vec_centroids" in str(k)]
-    assert keys, f"no memoized centroid entry; keys={list(per)[:5]}"
-    ids, cents = per[keys[0]]
-    assert len(ids) == len(cents) > 0
-    b = q_kmeans_clusters_vec(spark, sf_dir).toPandas()
-    key = lambda df: sorted(map(tuple, df[sorted(df.columns)].values.tolist()))  # noqa: E731
-    assert key(a) == key(b)

@@ -3,9 +3,10 @@
 Jaccard, embedding-cosine near-dup.
 
 Scale design (the whole point of these operators):
-- Signatures/shingles are computed as *array expressions inside the
-  row* (no explode shuffle) — a 100 TB corpus streams through the
-  scan stage embarrassingly parallel.
+- Shingles are hashed as array expressions inside the row, and
+  signatures are swept in numpy per Arrow batch (no explode shuffle)
+  — a 100 TB corpus streams through the scan stage embarrassingly
+  parallel.
 - Candidate generation is LSH band-bucketing: the only shuffle is a
   groupBy/join on the band key, whose cardinality is ~n_docs*bands —
   never the O(n²) pair space.
@@ -57,76 +58,26 @@ def shingles(c: Column, k: int = SHINGLE_K) -> Column:
     return shingles_from_tokens(tokens(c), k)
 
 
-def minhash_signature_array(hashes_col) -> Column:
-    """array<long> of the 16 MinHash values from an array<long> of
-    shingle hashes (already reduced mod P).
-
-    One ``aggregate`` pass with a 16-element array accumulator instead
-    of 16 separate array_min(transform(...)) projections: the latter
-    blows whole-stage codegen past janino's 64 KB method limit
-    (observed), costing ~15 s of compile+fallback on first execution.
-
-    Accepts a Column or a column NAME; name inputs memoize the built
-    tree per session (session.expr_memo — the fold is ~60 py4j round
-    trips per construction)."""
-    if isinstance(hashes_col, str):
-        from ..session import expr_memo
-
-        name = hashes_col
-        return expr_memo(
-            ("minhash_signature_array", name),
-            lambda: minhash_signature_array(F.col(name)),
-        )
-    a_arr = F.array(*[F.lit(a).cast("long") for a, _ in MINHASH_PERMS])
-    b_arr = F.array(*[F.lit(b).cast("long") for _, b in MINHASH_PERMS])
-    init = F.array_repeat(F.lit(P).cast("long"), N_PERMS)
-
-    def step(acc, h):
-        return F.zip_with(
-            acc,
-            F.sequence(F.lit(1), F.lit(N_PERMS)),
-            lambda m, j: F.least(
-                m, (F.element_at(a_arr, j) * h + F.element_at(b_arr, j)) % F.lit(P)
-            ),
-        )
-
-    return F.aggregate(hashes_col, init, step)
-
-
-def _sig_to_cols(df: DataFrame, sig_col: str = "sig") -> DataFrame:
-    """(..., sig: array<long>) -> (..., mh0..mh15); two-step select so
-    the aggregate is computed once, not per element."""
-    return df.select(
-        *[c for c in df.columns if c != sig_col],
-        *[F.element_at(sig_col, i + 1).alias(f"mh{i}") for i in range(N_PERMS)],
-    )
-
-
 def minhash_signatures(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """documents -> (doc_id, mh0..mh15); docs with no shingles dropped."""
-    hashed = hashed_shingle_docs(documents, text_col)
-    return _sig_to_cols(
-        hashed.select("doc_id", minhash_signature_array("hs").alias("sig"))
-    )
+    return minhash_from_hashed(hashed_shingle_docs(documents, text_col))
 
 
-def minhash_signatures_vec(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """``minhash_signatures``'s vectorized twin: numpy per partition
-    via ``mapInPandas`` instead of the interpreted 16-permutation
-    array fold (Spark higher-order functions are evaluated per
-    element, outside whole-stage codegen). MinHash is pure integer
-    arithmetic — min((a*h + b) mod P) with a < 2^30, h < 2^32 keeps
-    every product < 2^62 — so the numpy path is bit-identical to the
-    JVM fold and sits under the same oracle. The hash of each shingle
-    still happens JVM-side (md5 + conv in hashed_shingle_docs); only
-    the permutation/min sweep moves to Arrow."""
+def minhash_from_hashed(hashed: DataFrame) -> DataFrame:
+    """(doc_id, hs: array<long>) -> (doc_id, mh0..mh15): the MinHash
+    kernel, a numpy permutation/min sweep per Arrow batch via
+    ``mapInPandas``. Pure integer arithmetic — min((a*h + b) mod P)
+    with a < 2^30, h < 2^32 keeps every product < 2^62 — so it
+    hash-matches the DuckDB oracle's list fold exactly. The shingle
+    hashes (md5 + conv) come from ``hashed_shingle_docs``, JVM-side.
+
+    numpy rather than a Column ``aggregate``/``zip_with`` fold: Spark
+    evaluates higher-order functions per element outside whole-stage
+    codegen, and the fold measured about 2x slower on a 100k-doc
+    corpus (PLANS.md, "MinHash signatures")."""
     from ..session import ship_package
 
-    ship_package(documents.sparkSession)
-    return _signatures_vec_from_hashed(hashed_shingle_docs(documents, text_col))
-
-
-def _signatures_vec_from_hashed(hashed: DataFrame) -> DataFrame:
+    ship_package(hashed.sparkSession)
     a_np = [a for a, _ in MINHASH_PERMS]
     b_np = [b for _, b in MINHASH_PERMS]
 
@@ -203,7 +154,7 @@ def lsh_candidate_pairs(sigs: DataFrame, memo: bool = True) -> DataFrame:
     Shape: one groupBy(signature) collapse, then ONE registered memo
     entry holding BOTH persisted relations — the slim (rep, doc_id)
     membership map and the (signature, rep) representative table —
-    so neither the signature fold nor the collapse groupBy re-runs on
+    so neither the signature kernel nor the collapse groupBy re-runs on
     later actions over the returned pairs (the representative table
     is one row per DISTINCT signature, 17 longs wide). ``memo=False``
     (threaded from minhash_lsh_verified's file-rewrite hook) maps to
@@ -372,8 +323,7 @@ def jaccard_verify_hashed(hs_docs: DataFrame, pairs: DataFrame) -> DataFrame:
 
 
 def minhash_lsh_verified(
-    documents: DataFrame, text_col: str = "text", vectorized: bool = False,
-    memo: bool = True,
+    documents: DataFrame, text_col: str = "text", memo: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: hash shingles once -> signatures ->
     band buckets -> candidate pairs -> exact-Jaccard verify. The
@@ -382,11 +332,6 @@ def minhash_lsh_verified(
     the scan+md5 work. Result memoized per (session, input plan) so
     repeat calls don't stack persisted intermediates
     (session.plan_memo).
-
-    ``vectorized=True`` computes signatures with the numpy sweep
-    (``minhash_signatures_vec``) instead of the interpreted JVM fold —
-    bit-identical output (integer arithmetic), measurably faster once
-    shingle counts grow.
 
     ``memo=False`` invalidates any cached entry for this input plan —
     use when the files behind an unchanged path were rewritten
@@ -400,21 +345,16 @@ def minhash_lsh_verified(
 
     result, _hs = plan_memo(
         documents.sparkSession,
-        plan_key(documents, "minhash_lsh_verified", text_col, vectorized),
-        lambda: _minhash_lsh_verified(documents, text_col, vectorized, memo),
+        plan_key(documents, "minhash_lsh_verified", text_col),
+        lambda: _minhash_lsh_verified(documents, text_col, memo),
         refresh=not memo,
     )
     return result
 
 
 def _minhash_lsh_verified(
-    documents: DataFrame, text_col: str, vectorized: bool,
-    memo: bool = True,
+    documents: DataFrame, text_col: str, memo: bool = True,
 ) -> DataFrame:
-    if vectorized:
-        from ..session import ship_package
-
-        ship_package(documents.sparkSession)
     hs_docs = hashed_shingle_docs(documents, text_col).persist()
     # Eagerly materialize the hashed shingles: they feed the signature
     # pass AND the three verify branches of ONE action; an
@@ -424,17 +364,9 @@ def _minhash_lsh_verified(
     # collapse groupBy and the membership join) — both inside
     # lsh_candidate_pairs' ONE registered build, whose persisted
     # (members, reps) pair then serves every later action without
-    # touching the fold again.
+    # touching the signature kernel again.
     hs_docs.count()
-    if vectorized:
-        sigs = _signatures_vec_from_hashed(hs_docs)
-    else:
-        sigs = _sig_to_cols(
-            hs_docs.select(
-                "doc_id", minhash_signature_array("hs").alias("sig")
-            )
-        )
-    pairs = lsh_candidate_pairs(sigs, memo=memo)
+    pairs = lsh_candidate_pairs(minhash_from_hashed(hs_docs), memo=memo)
     # hs_docs rides along in the memo value so eviction unpersists it
     return jaccard_verify_hashed(hs_docs, pairs), hs_docs
 
@@ -451,12 +383,16 @@ def exact_duplicates(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _hashed_tokens(documents: DataFrame, text_col: str) -> DataFrame:
-    """(doc_id, _h: array<long>, _n) — the shared tokenize+hash
-    projection for both simhash paths. ONE definition so the JVM fold
-    and the numpy sweep stay bit-identical by construction."""
-    from ..session import expr_memo
+def simhash_docs(documents: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, simhash) — 16-bit SimHash over token hashes: tokens
+    are hashed JVM-side (md5 + conv, mod P), then the 16-bit-counter
+    majority sweep runs in numpy per Arrow batch. Pure integer
+    arithmetic, so it hash-matches the DuckDB oracle exactly; numpy
+    rather than a Column fold for the reason given in
+    ``minhash_from_hashed``."""
+    from ..session import expr_memo, ship_package
 
+    ship_package(documents.sparkSession)
     toks_expr = expr_memo(
         ("hsd_toks", text_col), lambda: tokens(F.col(text_col))
     )
@@ -466,57 +402,11 @@ def _hashed_tokens(documents: DataFrame, text_col: str) -> DataFrame:
             "_toks", lambda t: stable_hash64(t) % F.lit(P)
         ),
     )
-    with_toks = documents.select(
-        "doc_id", toks_expr.alias("_toks")
-    ).filter(F.size("_toks") > 0)
-    return with_toks.select(
-        "doc_id",
-        h_expr.alias("_h"),
-        F.size("_toks").cast("long").alias("_n"),
+    hashed = (
+        documents.select("doc_id", toks_expr.alias("_toks"))
+        .filter(F.size("_toks") > 0)
+        .select("doc_id", h_expr.alias("_h"))
     )
-
-
-def simhash_docs(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, simhash) — 16-bit SimHash over token hashes.
-
-    One aggregate pass with a 16-counter array accumulator instead of
-    16 independent folds (simhash16's Column form re-walks the hash
-    array per bit). Each stage materializes through a projection so
-    lambdas reference attributes, never re-evaluated subtrees. Bit j
-    of a hash is extracted as floor(h / 2^j) % 2 — h < 2^32 makes the
-    double division by a power of two exact (zip_with lambdas can't
-    take Python-literal shift amounts)."""
-    hashed = _hashed_tokens(documents, text_col)
-    pw = F.array(*[F.lit(1 << j).cast("long") for j in range(16)])
-    ones = F.aggregate(
-        F.col("_h"),
-        F.array_repeat(F.lit(0).cast("long"), 16),
-        lambda acc, x: F.zip_with(
-            acc,
-            pw,
-            lambda m, p: m + F.floor(x / p).cast("long").bitwiseAND(F.lit(1)),
-        ),
-    )
-    counted = hashed.select("doc_id", "_n", ones.alias("_ones"))
-    sim = F.lit(0).cast("long")
-    for j in range(16):
-        bit = F.when(
-            F.element_at("_ones", j + 1) * 2 > F.col("_n"),
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        sim = sim + F.shiftleft(bit, j)
-    return counted.select("doc_id", sim.alias("simhash"))
-
-
-def simhash_docs_vec(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """``simhash_docs``'s vectorized twin: the 16-bit-counter majority
-    sweep moves to numpy (the JVM fold is an interpreted higher-order
-    function). Pure integer arithmetic -> bit-identical output, same
-    oracle. Token hashing (md5 + conv) stays JVM-side."""
-    from ..session import ship_package
-
-    ship_package(documents.sparkSession)
-    hashed = _hashed_tokens(documents, text_col).drop("_n")
 
     def sim(batches):
         import numpy as np
@@ -542,7 +432,6 @@ def simhash_near_dups(
     documents: DataFrame,
     text_col: str = "text",
     max_hamming: int = 3,
-    vectorized: bool = False,
     _memo: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with GUARANTEED recall for
@@ -566,9 +455,9 @@ def simhash_near_dups(
     if _memo:
         return plan_memo(
             documents.sparkSession,
-            plan_key(documents, "simhash_near_dups", text_col, max_hamming, vectorized),
+            plan_key(documents, "simhash_near_dups", text_col, max_hamming),
             lambda: simhash_near_dups(
-                documents, text_col, max_hamming, vectorized, _memo=False
+                documents, text_col, max_hamming, _memo=False
             ),
         )
 
@@ -577,11 +466,7 @@ def simhash_near_dups(
         raise ValueError(
             f"banding guarantees recall only for max_hamming < {n_bands}"
         )
-    sh = (
-        simhash_docs_vec(documents, text_col)
-        if vectorized
-        else simhash_docs(documents, text_col)
-    ).persist()
+    sh = simhash_docs(documents, text_col).persist()
     sh.count()
     band_vals = F.array(
         *[

@@ -36,10 +36,7 @@ def _find_new_pairs(
         hs_new.unpersist()
         return None
     idempotent_append(hs_new, batch_id, hs_path)
-    sigs_new = dd._sig_to_cols(
-        hs_new.select("doc_id", dd.minhash_signature_array("hs").alias("sig"))
-    )
-    bands_new = dd.lsh_band_buckets(sigs_new).persist()
+    bands_new = dd.lsh_band_buckets(dd.minhash_from_hashed(hs_new)).persist()
     idempotent_append(bands_new, batch_id, bands_path)
 
     band_all = read_accumulated(spark, bands_path)

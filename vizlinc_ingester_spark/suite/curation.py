@@ -1151,12 +1151,7 @@ def q_decontaminate_fuzzy(spark, sf_dir):
     def build():
         hs = dd.hashed_shingle_docs(d, "text").persist()
         hs.count()  # materialize before concurrent consumers (r11 lesson)
-        sigs = dd._sig_to_cols(
-            hs.select(
-                "doc_id", dd.minhash_signature_array("hs").alias("sig")
-            )
-        )
-        bands = dd.lsh_band_buckets(sigs)
+        bands = dd.lsh_band_buckets(dd.minhash_from_hashed(hs))
         bench_bands = (
             bands.filter(F.col("doc_id") % BENCH_MOD == 0)
             .select(F.col("doc_id").alias("doc_b"), "band_key")

@@ -126,16 +126,9 @@ ORACLE_MINHASH_SIGS = f"WITH {SQL_SIGS_CTE.strip()} SELECT * FROM sigs"
 
 def q_dedup_minhash_lsh(spark, sf_dir):
     """Full LSH pipeline: signatures -> band buckets -> candidate
-    pairs -> exact-Jaccard verification. Signatures via the numpy
-    sweep (bit-identical to the JVM fold — pure integer arithmetic —
-    and faster once shingle counts grow; the fold stays gated via
-    minhash_signatures)."""
-    return dd.minhash_lsh_verified(_docs(spark, sf_dir), vectorized=True)
-
-
-def q_minhash_signatures_vec(spark, sf_dir):
-    """Vectorized signature twin under the same oracle as the fold."""
-    return dd.minhash_signatures_vec(_docs(spark, sf_dir))
+    pairs -> exact-Jaccard verification. The signature kernel is the
+    one ``minhash_signatures`` gates (operators/dedup.minhash_from_hashed)."""
+    return dd.minhash_lsh_verified(_docs(spark, sf_dir))
 
 
 ORACLE_DEDUP_MINHASH = f"""
@@ -174,9 +167,8 @@ def q_dedup_simhash(spark, sf_dir):
     recall-lossless for hamming <= 3 (pigeonhole), so the oracle is
     the EXHAUSTIVE pair join — the hash match proves the banded plan
     finds every qualifying pair, not merely that both engines share a
-    bucketing heuristic. Signatures via the numpy bit-count sweep
-    (bit-identical to the JVM fold; ~2x at sf0.1)."""
-    return dd.simhash_near_dups(_docs(spark, sf_dir), vectorized=True)
+    bucketing heuristic."""
+    return dd.simhash_near_dups(_docs(spark, sf_dir))
 
 
 ORACLE_DEDUP_SIMHASH = f"""
@@ -1104,7 +1096,9 @@ WHERE len(list_intersect(a.s, b.s)) * 1000000
 QUERIES = {
     "dedup_exact": q_dedup_exact,
     "minhash_signatures": q_minhash_signatures,
-    "minhash_signatures_vec": q_minhash_signatures_vec,
+    # alias: MinHash has one signature kernel; the name stays declared
+    # and gated
+    "minhash_signatures_vec": q_minhash_signatures,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "dedup_simhash": q_dedup_simhash,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,

@@ -929,13 +929,18 @@ ORACLES["dedup_semantic"] = ORACLE_DEDUP_SEMANTIC
 # attracts no vectors simply disappears from later rounds — same
 # algebra both engines).
 #
-# Plan at 100 TB: per round = one broadcast-assign scan (centroid set
-# is K rows — broadcast, corpus never shuffles for assignment) + one
-# (cluster, dim)-keyed partial-agg shuffle bounded by K x D groups.
-# That is THE scalable k-means; rounds are a fixed unrolled count
-# (PageRank discipline: oracle unrolls the same rounds as
-# MATERIALIZED CTEs, Spark localCheckpoints the K x D centroid table
-# per round to keep lineage flat).
+# Plan at 100 TB: per round = one Arrow-batched assignment pass (the
+# K x D centroid table is broadcast as a numpy int64 array — the
+# corpus never shuffles for assignment, and exact int64 squared
+# distances plus a (dist, cluster_id) argmin run per batch) + one
+# (cluster, dim)-keyed partial-agg shuffle bounded by K x D groups,
+# collected to the driver as the next round's centroids (bounded
+# driver-hosted state, the PQ-codebook precedent; it also keeps the
+# lineage flat). Rounds are a fixed unrolled count (PageRank
+# discipline: the oracle unrolls the same rounds as MATERIALIZED
+# CTEs). The assignment is numpy, not a Column zip_with/aggregate
+# fold: the fold is interpreted per element and measured 24.3 s
+# against 2.2 s at 10x scale (PLANS.md round 8).
 
 KMEANS_K = 64        # seed set: vec_id < KMEANS_K (fixed size, see header)
 KMEANS_ROUNDS = 2    # assignment passes (centroids update between)
@@ -947,77 +952,92 @@ def _micro_vec(col):
     )
 
 
-def _l2_micro(a, b):
-    d = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(d, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 def q_kmeans_clusters(spark, sf_dir):
     """Final-round assignment (vec_id, cluster_id, dist_sq) after
     KMEANS_ROUNDS Lloyd iterations from the deterministic seed set.
     Memoized per (session, input plan) — the assignment is a
     build-once/consume-many artifact (cluster_balanced_sample reads
     it; the _ivf_assigned precedent)."""
+    import numpy as np
+    import pandas as pd
+
     from ..session import plan_key, plan_memo
 
     e0 = _emb(spark, sf_dir)
+    e = e0.select("vec_id", _micro_vec(F.col("embedding")).alias("em"))
+    schema = "vec_id long, em array<long>, cluster_id long, dist_sq long"
+
+    def assign(cent_rows):
+        # centroid ids iterate ascending so the strict-< update below
+        # is the (dist, cluster_id) argmin
+        cent_rows = sorted(cent_rows, key=lambda r: r["cluster_id"])
+        bc = spark.sparkContext.broadcast((
+            np.array([r["cluster_id"] for r in cent_rows], dtype=np.int64),
+            np.array([r["cem"] for r in cent_rows], dtype=np.int64),
+        ))
+
+        def kernel(batches):
+            cids, cents = bc.value
+            for pdf in batches:
+                # no seed centroids: nothing to assign (the oracle's
+                # cross join with an empty seed set is empty)
+                if pdf.empty or not len(cids):
+                    continue
+                em = np.array(pdf["em"].tolist(), dtype=np.int64)
+                # (N, K, D) diffs are memory-heavy; loop K (small) instead
+                n = len(pdf)
+                best_d = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
+                best_c = np.zeros(n, dtype=np.int64)
+                for cid, cvec in zip(cids, cents):
+                    d = ((em - cvec) ** 2).sum(axis=1)
+                    upd = d < best_d
+                    best_d = np.where(upd, d, best_d)
+                    best_c = np.where(upd, cid, best_c)
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"],
+                        "em": pdf["em"],
+                        "cluster_id": best_c,
+                        "dist_sq": best_d,
+                    }
+                )
+
+        return e.mapInPandas(kernel, schema)
 
     def build():
-        out = _kmeans_assign(e0).persist()
+        cent_rows = (
+            e.filter(F.col("vec_id") < KMEANS_K)
+            .select(F.col("vec_id").alias("cluster_id"), F.col("em").alias("cem"))
+            .collect()
+        )
+        for _rnd in range(KMEANS_ROUNDS - 1):
+            sums = (
+                assign(cent_rows)
+                .select("cluster_id", F.posexplode("em").alias("dim", "val"))
+                .groupBy("cluster_id", "dim")
+                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+            )
+            cent_rows = (
+                sums.select(
+                    "cluster_id", "dim",
+                    F.floor(F.col("s").cast("double") / F.col("n"))
+                    .cast("long").alias("val"),
+                )
+                .groupBy("cluster_id")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("dim", "val"))),
+                        lambda s: s["val"],
+                    ).alias("cem")
+                )
+                .collect()
+            )
+        out = assign(cent_rows).select("vec_id", "cluster_id", "dist_sq").persist()
         out.count()
         return out
 
     return plan_memo(
         spark, plan_key(e0, "kmeans_assign", KMEANS_K, KMEANS_ROUNDS), build
-    )
-
-
-def _kmeans_assign(e0):
-    e = e0.select("vec_id", _micro_vec(F.col("embedding")).alias("em"))
-    cent = e.filter(F.col("vec_id") < KMEANS_K).select(
-        F.col("vec_id").alias("cluster_id"), F.col("em").alias("cem")
-    )
-    assigned = None
-    for rnd in range(KMEANS_ROUNDS):
-        scored = e.crossJoin(F.broadcast(cent)).select(
-            "vec_id", "em", "cluster_id",
-            _l2_micro(F.col("em"), F.col("cem")).alias("dist_sq"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.asc("dist_sq"), F.asc("cluster_id")
-        )
-        assigned = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("vec_id", "em", "cluster_id", "dist_sq")
-        )
-        if rnd == KMEANS_ROUNDS - 1:
-            break
-        sums = (
-            assigned.select(
-                "cluster_id", F.posexplode("em").alias("dim", "val")
-            )
-            .groupBy("cluster_id", "dim")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
-        cent = (
-            sums.select(
-                "cluster_id", "dim",
-                F.floor(F.col("s").cast("double") / F.col("n"))
-                .cast("long").alias("val"),
-            )
-            .groupBy("cluster_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "val"))),
-                    lambda s: s["val"],
-                ).alias("cem")
-            )
-            .localCheckpoint()  # K x D rows; truncates per-round lineage
-        )
-    return assigned.select(
-        "vec_id", F.col("cluster_id").cast("long").alias("cluster_id"),
-        F.col("dist_sq").cast("long").alias("dist_sq"),
     )
 
 
@@ -1152,127 +1172,10 @@ QUERIES["cluster_balanced_sample"] = q_cluster_balanced_sample
 ORACLES["cluster_balanced_sample"] = _cb_sample_oracle()
 
 
-def q_kmeans_clusters_vec(spark, sf_dir):
-    """Bit-identical numpy twin of ``q_kmeans_clusters`` (same oracle
-    — the minhash_signatures_vec discipline): the K x N x D
-    assignment distance is the dominant cost and is interpreted
-    per-element in the Column form (measured 15.6 s at 10x scale,
-    PLANS.md round-8); here each round's centroid table (K x D
-    bigints — bounded, the PQ-codebook precedent for driver-hosted
-    per-round state) broadcasts as a numpy int64 array and an
-    Arrow-batched mapInPandas computes exact int64 squared distances
-    + (dist, cluster_id) lexicographic argmin. Integer math
-    end-to-end, so results hash-match the Column form and the DuckDB
-    oracle exactly.
-
-    r14: the TRAINED final-round centroid arrays are memoized per
-    (session, emb plan, K, rounds) — the trained-artifact stance
-    (_pq_train; the Column twin memoizes more, the full assignment) —
-    so warm invocations pay exactly one corpus pass: the final
-    Arrow-batched assignment itself. Training (the inter-round
-    posexplode + K x D mean update) runs once per session/input."""
-    import numpy as np
-    import pandas as pd
-
-    from ..session import plan_key, plan_memo
-
-    e = _emb(spark, sf_dir).select(
-        "vec_id", _micro_vec(F.col("embedding")).alias("em")
-    )
-    seed_rows = lambda: (  # noqa: E731 — deferred: warm calls skip it
-        e.filter(F.col("vec_id") < KMEANS_K)
-        .select(F.col("vec_id").alias("cluster_id"), F.col("em").alias("cem"))
-        .collect()
-    )
-
-    def assign_factory(ids_arr, cents_arr):
-        bids = spark.sparkContext.broadcast(ids_arr)
-        bcents = spark.sparkContext.broadcast(cents_arr)
-
-        def assign(batches):
-            cids, cents = bids.value, bcents.value
-            for pdf in batches:
-                em = np.array(pdf["em"].tolist(), dtype=np.int64)
-                # (N, K, D) diffs are memory-heavy; loop K (small) instead
-                n = len(pdf)
-                best_d = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-                best_c = np.zeros(n, dtype=np.int64)
-                for cid, cvec in zip(cids, cents):
-                    d = ((em - cvec) ** 2).sum(axis=1)
-                    upd = (d < best_d) | ((d == best_d) & (cid < best_c))
-                    best_d = np.where(upd, d, best_d)
-                    best_c = np.where(upd, cid, best_c)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "em": pdf["em"],
-                        "cluster_id": best_c,
-                        "dist_sq": best_d,
-                    }
-                )
-
-        return assign
-
-    schema = "vec_id long, em array<long>, cluster_id long, dist_sq long"
-
-    def _arrays(cent_rows):
-        ids = np.array([r["cluster_id"] for r in cent_rows], dtype=np.int64)
-        cents = np.array([r["cem"] for r in cent_rows], dtype=np.int64)
-        # centroid ids iterate ascending so the tie-break matches the
-        # Column form's (dist, cluster_id) argmin
-        order = np.argsort(ids)
-        return ids[order], cents[order]
-
-    def train():
-        # Lloyd update sweeps (rounds 0..ROUNDS-2): each assigns the
-        # corpus against the current centroids and recomputes the
-        # K x D means. The FINAL-round centroid arrays are the trained
-        # artifact — memoized per (session, emb plan, K, rounds) like
-        # every other trained model here (_pq_train / q_kmeans_clusters
-        # memoize MORE: the full assignment), so warm invocations pay
-        # exactly one corpus pass: the final assignment itself.
-        cent_rows = seed_rows()
-        for _rnd in range(KMEANS_ROUNDS - 1):
-            ids_r, cents_r = _arrays(cent_rows)
-            assigned_r = e.mapInPandas(assign_factory(ids_r, cents_r), schema)
-            sums = (
-                assigned_r.select(
-                    "cluster_id", F.posexplode("em").alias("dim", "val")
-                )
-                .groupBy("cluster_id", "dim")
-                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            )
-            cent_rows = (
-                sums.select(
-                    "cluster_id", "dim",
-                    F.floor(F.col("s").cast("double") / F.col("n"))
-                    .cast("long").alias("val"),
-                )
-                .groupBy("cluster_id")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "val"))),
-                        lambda s: s["val"],
-                    ).alias("cem")
-                )
-                .collect()
-            )
-        return _arrays(cent_rows)
-
-    ids_f, cents_f = plan_memo(
-        spark,
-        plan_key(e, "kmeans_vec_centroids", KMEANS_K, KMEANS_ROUNDS),
-        train,
-    )
-    assigned = e.mapInPandas(assign_factory(ids_f, cents_f), schema)
-    return assigned.select(
-        "vec_id", F.col("cluster_id").cast("long").alias("cluster_id"),
-        F.col("dist_sq").cast("long").alias("dist_sq"),
-    )
-
-
-QUERIES["kmeans_clusters_vec"] = q_kmeans_clusters_vec
-ORACLES["kmeans_clusters_vec"] = _kmeans_oracle()
+# alias: k-means has one kernel (the numpy one above); the name stays
+# declared and gated
+QUERIES["kmeans_clusters_vec"] = q_kmeans_clusters
+ORACLES["kmeans_clusters_vec"] = ORACLES["kmeans_clusters"]
 
 
 # --- Johnson-Lindenstrauss random projection (round 8) ----------------------

@@ -1025,9 +1025,8 @@ def q_streaming_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``similarity._ivf_assigned`` (which scores RAW embeddings with
     the interpreted fold) — on data where the raw and quantized
     micro-cosines floor differently near a centroid tie, the two
-    indexes may assign a vector differently; they are parallel gated
-    forms (the kmeans_clusters / kmeans_clusters_vec stance), not
-    interchangeable stores."""
+    indexes may assign a vector differently; they are two gated
+    stores with different score arithmetic, not interchangeable."""
     raw = _read_table(spark, os.path.join(sf_dir, "embeddings.parquet"))
     stage = _staged_halves(spark, raw, "ivf", "vec_id")
     store = _run_ivf_ingest_stream(
@@ -1109,9 +1108,9 @@ def _run_ivf_ingest_stream(spark: SparkSession, raw: DataFrame,
     one parquet SEGMENT per batch append, rows (vec_id, centroid_id).
     Assignment uses the ann_cosine_topk_vec arithmetic via one BLAS
     matmul per Arrow batch instead of the interpreted per-pair fold
-    (measured: the fold form cost ~7 s/invocation at sf0.1, the
-    matmul form is the same shape kmeans_clusters_vec measured 11x
-    faster)."""
+    (measured: the fold form cost ~7 s/invocation at sf0.1; the
+    numpy k-means assignment, the same shape, measured 11x faster than
+    its fold at 10x scale, PLANS.md round 8)."""
     store = os.path.join(work, "postings")
     src = (
         spark.readStream.schema(raw.schema)
@@ -1384,14 +1383,13 @@ def _run_lsh_ingest_stream(spark: SparkSession, raw: DataFrame,
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
         hs = dd.hashed_shingle_docs(batch.select("doc_id", "text"))
-        # vectorized signature sweep (bit-identical to the Column
-        # fold, same oracle); persisted + eagerly materialized for
-        # the batch's duration — the signature lineage (md5 per
+        # signatures persisted + eagerly materialized for the
+        # batch's duration — the signature lineage (md5 per
         # shingle, ~4 s per half-corpus at sf0.1) feeds the collapse
         # groupBy, the membership join and the banding, and
         # unpersisted it re-ran per consumer (measured 20.9 s ->
         # ~11 s per invocation). Batch-scoped, released in finally.
-        sigs = dd._signatures_vec_from_hashed(hs).persist()
+        sigs = dd.minhash_from_hashed(hs).persist()
         reps = None
         try:
             sigs.count()
