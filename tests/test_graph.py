@@ -74,3 +74,12 @@ def test_degree_oriented_triangles_k4_and_star(spark):
         [(1, k) for k in range(2, 9)], "src long, dst long"
     )
     assert triangles(star).count() == 0
+
+
+def test_empty_and_self_loop_edges_yield_no_rows(spark):
+    """No edges, or self-loops only: no component rows and no error
+    (callers union isolated nodes back themselves)."""
+    empty = spark.createDataFrame([], "src long, dst long")
+    loops = spark.createDataFrame([(1, 1), (2, 2)], "src long, dst long")
+    assert connected_components(empty).count() == 0
+    assert connected_components(loops).count() == 0

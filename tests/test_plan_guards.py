@@ -148,3 +148,33 @@ def test_sketch_defaults_plan_numpy_kernels(spark, sf_dir):
         assert "zip_with" not in plan and "aggregate(" not in plan, (
             f"{name}\n" + plan[:4000]
         )
+
+
+def test_prefix_merge_builds_without_jobs(spark):
+    """Building the prefix-merged within-doc pass and its mention
+    assignment fires no Spark job: the prefix closure is one window in
+    the plan, not a driver-side fixpoint of persist/count/checkpoint."""
+    from vizlinc_ingester_spark.operators import coref
+
+    m = spark.createDataFrame(
+        [(1, 1, "PERSON", "ANA", 1, None, 0, 3),
+         (2, 1, "PERSON", "ANA MARIA", 2, None, 0, 9),
+         (3, 2, "PERSON", "JO", 3, None, 0, 2)],
+        "mention_id long, doc_id long, type string, text string, idx long,"
+        " global_id string, text_start long, text_stop long",
+    )
+    sc = spark.sparkContext
+    group = "prefix-merge-build-guard"
+    sc.setJobGroup(group, "build the prefix-merged within-doc pass")
+    try:
+        wd = coref.within_doc_entities(m, "PERSON", prefix_merge=True)
+        coref.assign_mentions_to_entities(m, "PERSON", prefix_merge=True, wd=wd)
+        coref.assign_mentions_to_entities(m, "PERSON", prefix_merge=True)
+        built = list(sc.statusTracker().getJobIdsForGroup(group))
+        wd.count()  # control: jobs under this group are visible
+        ran = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert built == [], built
+    assert ran, "status tracker saw no job for the control action"

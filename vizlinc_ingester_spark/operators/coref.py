@@ -177,10 +177,10 @@ def within_doc_entities(
     default. ``prefix_merge=True`` adds the reference's third pass,
     combineFirstnameFullname (src/CorefBase.groovy:95-133): a cluster
     whose name (>= 2 chars) is a proper prefix of exactly one other
-    cluster name in its document absorbs into it. Prefix edges jump
-    arbitrary sort distance, so the closure runs through the general
-    connected-components operator (operators/graph.py) — the one
-    genuinely iterative step (SURVEY.md §2.10 G1).
+    cluster name in its document absorbs into it. Unique prefixes only
+    ever link sort-adjacent islands, so the closure is one lag/lead
+    window over the island reps (``_apply_prefix_merge``), not an
+    iterative fixpoint.
 
     Output: (entity_id, type, text, created_by, num_docs, num_mentions,
     doc_id, cluster_seq) — one row per per-document entity.
@@ -196,61 +196,41 @@ def within_doc_entities(
 
 
 def _apply_prefix_merge(clustered: DataFrame, scope_cols: list[str]) -> DataFrame:
-    """Fold J5 prefix pairs into the island clustering: islands whose
-    representative names are linked by a unique-prefix relation join
-    one connected component; ``cluster_seq`` is rewritten to the
-    min island id of the component."""
-    from .graph import connected_components
+    """Fold J5 prefix absorption into the island clustering with one
+    island-level window: no driver action, no iteration.
 
-    # Collision-free island node id: the (scope, cluster_seq) struct
-    # itself. A hashed numeric id collides at the birthday bound over
-    # the corpus (certain at ~1e9 docs in a 2^40 bucket space), and a
-    # collision lets CC union components across unrelated documents.
-    # connected_components only needs equality + a total order, both of
-    # which Spark structs provide; since prefix edges never cross a
-    # scope, every component stays within one scope and the component
-    # min's cluster_seq field IS the scope-local min island id.
-    node = F.struct(
-        *[F.col(c) for c in scope_cols], F.col("cluster_seq")
-    )
-    clustered = clustered.withColumn("island_node", node)
+    The reference's prefix pass runs over cluster KEYS after
+    adjacent-merge (src/CorefBase.groovy:95-133 iterates the cluster
+    map), so "ANA MARIA"/"ANA MARIE" count as ONE candidate full name.
+    The surviving key is encounter-order-dependent in the reference; we
+    take min(norm) per island (deterministic, SURVEY §7 tie-break rule).
 
-    # One representative name per island: the reference's prefix pass
-    # runs over cluster KEYS after adjacent-merge
-    # (src/CorefBase.groovy:95-133 iterates the cluster map), so
-    # "ANA MARIA"/"ANA MARIE" count as ONE candidate full name. The
-    # surviving key is encounter-order-dependent in the reference; we
-    # take min(norm) per island (deterministic, SURVEY §7 tie-break
-    # rule).
-    names = clustered.groupBy(*scope_cols, "island_node").agg(
-        F.min("norm").alias("norm")
+    Exact without a closure: identical names always share an island
+    (distance 0), so reps strictly increase with ``cluster_seq``; the
+    reps starting with ``p`` form one run directly after ``p`` in byte
+    order, so rep(i-1) is a proper prefix of exactly one rep iff rep(i)
+    starts with it and rep(i+1) does not; and a chain A ⊂ B ⊂ C makes A
+    non-unique, so every component is the pair (i-1, i). The absorbed
+    island i takes ``cluster_seq`` i-1, the component's min island id.
+    """
+    w = Window.partitionBy(*scope_cols).orderBy("cluster_seq")
+    prev, nxt = F.lag("rep").over(w), F.lead("rep").over(w)
+    absorbed = (
+        clustered.groupBy(*scope_cols, "cluster_seq")
+        .agg(F.min("norm").alias("rep"))
+        .withColumn(
+            "absorbed",
+            (F.length(prev) >= 2)
+            & F.col("rep").startswith(prev)
+            & (nxt.isNull() | ~nxt.startswith(prev)),
+        )
+        .filter("absorbed")
+        .select(*scope_cols, "cluster_seq", (F.col("cluster_seq") - 1).alias("merged_seq"))
     )
-    pairs = prefix_merge_pairs(names, scope_cols, "norm")
-    a = names.select(
-        *scope_cols, F.col("norm").alias("first_name"),
-        F.col("island_node").alias("src"),
-    )
-    b = names.select(
-        *scope_cols, F.col("norm").alias("full_name"),
-        F.col("island_node").alias("dst"),
-    )
-    edges = (
-        pairs.join(a, [*scope_cols, "first_name"])
-        .join(b, [*scope_cols, "full_name"])
-        .select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-    )
-    cc = connected_components(edges)
-    merged = clustered.join(
-        cc, clustered["island_node"] == cc["node"], "left"
-    ).withColumn(
-        "new_cluster",
-        F.coalesce(
-            F.col("component").getField("cluster_seq"), F.col("cluster_seq")
-        ),
-    )
-    return merged.drop("node", "component", "island_node", "cluster_seq").withColumnRenamed(
-        "new_cluster", "cluster_seq"
+    return (
+        clustered.join(absorbed, [*scope_cols, "cluster_seq"], "left")
+        .withColumn("cluster_seq", F.coalesce("merged_seq", "cluster_seq"))
+        .drop("merged_seq")
     )
 
 

@@ -2,11 +2,12 @@
 
 The reference's cluster merge (src/CorefBase.groovy:220-270) rewires
 mention edges onto a surviving entity node per cluster. For
-sort-adjacent merge edges the clusters degenerate to runs (handled in
+sort-adjacent merge edges the clusters degenerate to runs, and unique
+firstname-prefix J5 edges to sort-adjacent pairs (both handled in
 coref.py without iteration); this module provides the *general*
-connected-components fixpoint for arbitrary candidate-edge sets
-(e.g. union of adjacent-close W1 edges + firstname-prefix J5 edges,
-or cross-blocking LSH edges).
+connected-components fixpoint for arbitrary candidate-edge sets, such
+as the verified LSH near-dup edges of ``suite/dedup.q_dedup_clusters``
+and the ``plans/curate.py`` near-dedup step.
 
 Algorithm: small-star / large-star style min-label propagation —
 each node repeatedly adopts the smallest component id among itself

@@ -181,11 +181,13 @@ def q_across_doc_entities_location(spark, sf_dir):
 
 def q_within_doc_entities_person_merged(spark, sf_dir):
     """Full within-doc algorithm incl. the firstname-prefix absorption
-    pass (combineFirstnameFullname) — exercises the iterative
-    connected-components operator under the oracle gate (the DuckDB
-    mirror runs CC as a recursive CTE). cluster ids differ between
-    engines by construction; entity_id (min mention id) is the stable
-    cluster identity compared."""
+    pass (combineFirstnameFullname). The engine closes unique-prefix
+    pairs with one lag/lead window over the island reps; the DuckDB
+    mirror closes them with a recursive CTE, so the gate checks the
+    window form against a general closure (the iterative
+    connected-components operator is gated by ``dedup_clusters``).
+    cluster ids differ between engines by construction; entity_id (min
+    mention id) is the stable cluster identity compared."""
     return coref.within_doc_entities(
         derived_mentions(spark, sf_dir), "PERSON", prefix_merge=True
     ).select("entity_id", "type", "text", "created_by", "num_docs", "num_mentions")
