@@ -42,6 +42,14 @@ def test_full_pipeline_sf0001(spark, sf_dir, tmp_path):
         assert f"within_doc_{t}_coref" in created
         assert f"across_doc_{t}_coref" in created
 
+    # the one all-types coref pass equals one single-type call per type
+    # over the pipeline's own checkpointed mentions
+    want_entities, want_assigned = _per_type_coref(
+        spark.read.parquet(str(tmp_path / "work" / "mentions"))
+    )
+    _assert_same_rows(res["entities"], want_entities)
+    _assert_same_rows(res["mentions"], want_assigned)
+
     # mentions_assigned references only existing entities
     orphan = (
         res["mentions"].join(
@@ -66,6 +74,32 @@ def test_full_pipeline_sf0001(spark, sf_dir, tmp_path):
     # GraphML written
     assert os.path.exists(str(tmp_path / "sn.graphml"))
     assert res["graphml_counts"]["nodes"] >= 0
+
+
+def _per_type_coref(ment):
+    """(entities, assigned mentions) built the way the reference runs
+    its coref steps: one single-type call per type, the person pass
+    with prefix absorption."""
+    from vizlinc_ingester_spark.operators import coref
+
+    cols = ["entity_id", "type", "text", "created_by", "num_docs", "num_mentions"]
+    entities = assigned = None
+    for t in plan.COREF_TYPES:
+        pm = t == "PERSON"
+        wd = coref.within_doc_entities(ment, t, prefix_merge=pm)
+        ents = wd.select(*cols).unionByName(
+            coref.across_doc_entities(ment, t, wd=wd).select(*cols)
+        )
+        asg = coref.assign_mentions_to_entities(ment, t, prefix_merge=pm, wd=wd)
+        entities = ents if entities is None else entities.unionByName(ents)
+        assigned = asg if assigned is None else assigned.unionByName(asg)
+    return entities, assigned
+
+
+def _assert_same_rows(got, want):
+    want = want.select(*got.columns)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
 def test_pipeline_from_directory(spark, tmp_path):

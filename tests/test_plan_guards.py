@@ -178,3 +178,42 @@ def test_prefix_merge_builds_without_jobs(spark):
         sc.setLocalProperty("spark.job.description", None)
     assert built == [], built
     assert ran, "status tracker saw no job for the control action"
+
+
+def _without_initial_plans(plan: str) -> list[str]:
+    """The lines of a plan string minus AQE's "== Initial Plan ==" copy
+    (a cached, executed adaptive plan prints its final and its initial
+    form)."""
+    out, skip_below = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = None
+        if "== Initial Plan ==" in line:
+            skip_below = depth
+            continue
+        out.append(line)
+    return out
+
+
+def test_across_doc_all_types_one_range_sort(spark, sf_dir):
+    """The across-doc pass over all three coref types sorts once: its
+    executed plan holds exactly one range-partitioning exchange (the
+    sorted-neighborhood build scoped by (type, strong)), where one call
+    per type would hold three."""
+    import os
+
+    from vizlinc_ingester_spark.operators import coref, mentions
+    from vizlinc_ingester_spark.plans.ingest import COREF_TYPES
+
+    m = mentions.derive_mentions(
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    )
+    out = coref.across_doc_entities(m, COREF_TYPES)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    ranges = [
+        ln for ln in _without_initial_plans(plan)
+        if "Exchange rangepartitioning" in ln
+    ]
+    assert len(ranges) == 1, plan[:8000]

@@ -16,12 +16,21 @@ window, no iterative fixpoint needed (SURVEY.md §2.10 semantic note).
 The general fixpoint lives in ``operators/graph.py`` for arbitrary
 edge sets.
 
+The reference runs the algorithm once per entity type. Here every
+window and aggregation is keyed by ``type``, and the per-type rules
+(junk class, strong-candidate predicate, ``created_by``, the
+PERSON-only prefix pass) are ``type``-keyed expressions, so the
+operators take one type or a tuple of types and a tuple runs all of
+them in one plan.
+
 Determinism deviations (documented, SURVEY.md §7): ties in
 canonical-name mode are broken by name ascending; ``num_docs`` counts
 distinct documents rather than absorbed-node count.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,6 +45,7 @@ from ..functions.normalize import (
 
 MIN_NUM_DOCS = 2  # src/AcrossDocPerCoref.groovy:51
 LEVENSHTEIN_MAX = 1  # score > -1.1 <=> distance <= 1 (src/WithinDocPerCoref.groovy:36-37)
+WITHIN_SCOPE = ["doc_id", "type"]  # within-doc blocking scope
 
 # Candidate predicates (src/AcrossDoc{Per,Org,Loc}Coref.groovy)
 CANDIDATE_RULES = {
@@ -45,21 +55,49 @@ CANDIDATE_RULES = {
 }
 
 
+def _types(entity_types: str | tuple[str, ...]) -> tuple[str, ...]:
+    """One type name or a tuple of them, as a tuple."""
+    return (entity_types,) if isinstance(entity_types, str) else tuple(entity_types)
+
+
+def _by_type(types: tuple[str, ...], value: Callable[[str], Column]) -> Column:
+    """``value(t)`` on the rows whose ``type`` is ``t``. One type keeps
+    the bare expression (and so today's single-type plan); several
+    become one CASE on the ``type`` column, so every type runs through
+    the same plan, partitioned by ``type``."""
+    if len(types) == 1:
+        return value(types[0])
+    out = F.when(F.col("type") == types[0], value(types[0]))
+    for t in types[1:]:
+        out = out.when(F.col("type") == t, value(t))
+    return out
+
+
+def _created_by(types: tuple[str, ...], fmt: str) -> Column:
+    """Provenance label, e.g. ``within_doc_{}_coref`` -> within_doc_person_coref."""
+    return _by_type(types, lambda t: F.lit(fmt.format(t.lower())))
+
+
 def junk_re_for(entity_type: str) -> str:
     # '"' is a good char in a location (src/CorefBase.groovy:44-46)
     return JUNK_RE_LOCS if entity_type == "LOCATION" else JUNK_RE
 
 
-def is_strong_candidate(name: Column, entity_type: str) -> Column:
-    """F4/F5/F6 — strong vs weak candidate predicate."""
-    r = CANDIDATE_RULES[entity_type]
-    cond = (
-        (F.length(name) >= r["chars_min"])
-        & token_count(name).between(r["tokens_min"], r["tokens_max"])
-    )
-    if r["charset"]:
-        cond = cond & name.rlike(r["charset"])
-    return cond
+def is_strong_candidate(name: Column, entity_type: str | tuple[str, ...]) -> Column:
+    """F4/F5/F6 — strong vs weak candidate predicate (per ``type`` when
+    given several types)."""
+
+    def rule(t: str) -> Column:
+        r = CANDIDATE_RULES[t]
+        cond = (
+            (F.length(name) >= r["chars_min"])
+            & token_count(name).between(r["tokens_min"], r["tokens_max"])
+        )
+        if r["charset"]:
+            cond = cond & name.rlike(r["charset"])
+        return cond
+
+    return _by_type(_types(entity_type), rule)
 
 
 def _islands(df: DataFrame, scope_cols: list[str], name_col: str, tiebreak_col: str) -> DataFrame:
@@ -157,47 +195,77 @@ def _synthesize_entities(
     )
 
 
-def normalized_mentions(mentions: DataFrame, entity_type: str) -> DataFrame:
-    """F2 + F3 + C1: type filter, normalize, drop empty-after-normalize."""
+def normalized_mentions(
+    mentions: DataFrame, entity_type: str | tuple[str, ...]
+) -> DataFrame:
+    """F2 + F3 + C1: type filter, normalize (each type with its own
+    junk class), drop empty-after-normalize. ``entity_type`` is one
+    type or a tuple of types."""
+    types = _types(entity_type)
+    norm = _by_type(types, lambda t: normalize_str(F.col("text"), junk_re_for(t)))
     return (
-        mentions.filter(F.col("type") == entity_type)
-        .withColumn("norm", normalize_str(F.col("text"), junk_re_for(entity_type)))
+        mentions.filter(F.col("type").isin(*types))
+        .withColumn("norm", norm)
         .filter(F.length("norm") > 0)
     )
 
 
+def _within_doc_clusters(
+    mentions: DataFrame, types: tuple[str, ...], prefix_merge: bool
+) -> DataFrame:
+    """Normalized mentions with their within-doc ``cluster_seq``
+    (unique per (doc_id, type)); the prefix pass applies to PERSON
+    rows only."""
+    clustered = _islands(
+        normalized_mentions(mentions, types), WITHIN_SCOPE, "norm", "mention_id"
+    )
+    if prefix_merge and "PERSON" in types:
+        clustered = _apply_prefix_merge(clustered, types)
+    return clustered
+
+
 def within_doc_entities(
-    mentions: DataFrame, entity_type: str, prefix_merge: bool = False
+    mentions: DataFrame,
+    entity_type: str | tuple[str, ...],
+    prefix_merge: bool = False,
 ) -> DataFrame:
     """Within-document coref (src/WithinDocPerCoref.groovy:32-59):
     returns entities + their mention assignment.
 
+    ``entity_type`` is one type or a tuple of types. Every window and
+    aggregation is keyed by (doc_id, type), so a tuple runs all types
+    in one plan and its output, filtered to one type, equals that
+    type's own call row for row.
+
     ``prefix_merge=False``: exact-match + sorted-neighborhood merge
     (combineByExactMatch + combineAdjacentClose) — the oracle-checked
     default. ``prefix_merge=True`` adds the reference's third pass,
-    combineFirstnameFullname (src/CorefBase.groovy:95-133): a cluster
-    whose name (>= 2 chars) is a proper prefix of exactly one other
-    cluster name in its document absorbs into it. Unique prefixes only
-    ever link sort-adjacent islands, so the closure is one lag/lead
-    window over the island reps (``_apply_prefix_merge``), not an
+    combineFirstnameFullname (src/CorefBase.groovy:95-133), to PERSON
+    rows only (the reference runs it only in WithinDocPerCoref): a
+    cluster whose name (>= 2 chars) is a proper prefix of exactly one
+    other cluster name in its document absorbs into it. Unique
+    prefixes only ever link sort-adjacent islands, so the closure is a
+    few windows over the island reps (``_apply_prefix_merge``), not an
     iterative fixpoint.
 
     Output: (entity_id, type, text, created_by, num_docs, num_mentions,
     doc_id, cluster_seq) — one row per per-document entity.
     """
-    nm = normalized_mentions(mentions, entity_type)
-    clustered = _islands(nm, ["doc_id", "type"], "norm", "mention_id")
-    if prefix_merge:
-        clustered = _apply_prefix_merge(clustered, ["doc_id", "type"])
-    created_by = F.lit(f"within_doc_{entity_type.lower()}_coref")
+    types = _types(entity_type)
+    clustered = _within_doc_clusters(mentions, types, prefix_merge)
     return _synthesize_entities(
-        clustered, ["doc_id", "type"], created_by, member_id="mention_id"
+        clustered, WITHIN_SCOPE, _created_by(types, "within_doc_{}_coref"),
+        member_id="mention_id",
     ).drop("num_members")
 
 
-def _apply_prefix_merge(clustered: DataFrame, scope_cols: list[str]) -> DataFrame:
-    """Fold J5 prefix absorption into the island clustering with one
-    island-level window: no driver action, no iteration.
+def _apply_prefix_merge(clustered: DataFrame, types: tuple[str, ...]) -> DataFrame:
+    """Fold J5 prefix absorption into the island clustering with
+    windows over ``clustered``: no join, no driver action, no
+    iteration. The island windows are keyed (doc_id, type,
+    cluster_seq), which the (doc_id, type) exchange of ``_islands``
+    already satisfies, so the lineage is read once and no shuffle is
+    added.
 
     The reference's prefix pass runs over cluster KEYS after
     adjacent-merge (src/CorefBase.groovy:95-133 iterates the cluster
@@ -213,72 +281,79 @@ def _apply_prefix_merge(clustered: DataFrame, scope_cols: list[str]) -> DataFram
     non-unique, so every component is the pair (i-1, i). The absorbed
     island i takes ``cluster_seq`` i-1, the component's min island id.
     """
-    w = Window.partitionBy(*scope_cols).orderBy("cluster_seq")
-    prev, nxt = F.lag("rep").over(w), F.lead("rep").over(w)
+    island = Window.partitionBy(*WITHIN_SCOPE, "cluster_seq")
+    w = Window.partitionBy(*WITHIN_SCOPE).orderBy("cluster_seq")
+    seq, rep = F.col("cluster_seq"), F.col("__rep")
+    # the previous island's rep sits on the lag of an island's first
+    # row, the next island's on the lead of its last row
+    edges = clustered.withColumn("__rep", F.min("norm").over(island)).select(
+        "*",
+        F.when(F.lag(seq).over(w) != seq, F.lag(rep).over(w)).alias("__prev"),
+        F.when(F.lead(seq).over(w) != seq, F.lead(rep).over(w)).alias("__next"),
+    )
+    spread = edges.select(
+        *clustered.columns,
+        rep,
+        F.max("__prev").over(island).alias("__prev"),
+        F.max("__next").over(island).alias("__next"),
+    )
+    prev, nxt = F.col("__prev"), F.col("__next")
     absorbed = (
-        clustered.groupBy(*scope_cols, "cluster_seq")
-        .agg(F.min("norm").alias("rep"))
-        .withColumn(
-            "absorbed",
-            (F.length(prev) >= 2)
-            & F.col("rep").startswith(prev)
-            & (nxt.isNull() | ~nxt.startswith(prev)),
-        )
-        .filter("absorbed")
-        .select(*scope_cols, "cluster_seq", (F.col("cluster_seq") - 1).alias("merged_seq"))
+        (F.length(prev) >= 2)
+        & rep.startswith(prev)
+        & (nxt.isNull() | ~nxt.startswith(prev))
     )
-    return (
-        clustered.join(absorbed, [*scope_cols, "cluster_seq"], "left")
-        .withColumn("cluster_seq", F.coalesce("merged_seq", "cluster_seq"))
-        .drop("merged_seq")
-    )
+    if types != ("PERSON",):
+        absorbed = absorbed & (F.col("type") == "PERSON")
+    return spread.withColumn(
+        "cluster_seq", F.when(absorbed, seq - 1).otherwise(seq)
+    ).drop("__rep", "__prev", "__next")
 
 
 def assign_mentions_to_entities(
     mentions: DataFrame,
-    entity_type: str,
+    entity_type: str | tuple[str, ...],
     prefix_merge: bool = False,
     wd: DataFrame | None = None,
 ) -> DataFrame:
     """J7 — mention -> entity_id assignment for the within-doc pass
-    (cluster membership is the join key). ``prefix_merge`` must match
-    the flag used for ``within_doc_entities`` so cluster keys align.
-    Pass a precomputed/persisted ``wd`` (same mentions + flag) to
+    (cluster membership is the join key: ``cluster_seq`` is unique
+    only per (doc_id, type)). ``prefix_merge`` must match the flag
+    used for ``within_doc_entities`` so cluster keys align. Pass a
+    precomputed/persisted ``wd`` (same mentions, types + flag) to
     avoid re-deriving the entity table — Catalyst does not CSE the
     shared subplan."""
-    nm = normalized_mentions(mentions, entity_type)
-    clustered = _islands(nm, ["doc_id", "type"], "norm", "mention_id")
-    if prefix_merge:
-        clustered = _apply_prefix_merge(clustered, ["doc_id", "type"])
+    types = _types(entity_type)
+    clustered = _within_doc_clusters(mentions, types, prefix_merge)
     entities = (
         wd
         if wd is not None
-        else within_doc_entities(mentions, entity_type, prefix_merge=prefix_merge)
+        else within_doc_entities(mentions, types, prefix_merge=prefix_merge)
     )
-    return clustered.join(
-        entities.select("doc_id", "cluster_seq", "entity_id"),
-        ["doc_id", "cluster_seq"],
-    ).select(
+    keys = [*WITHIN_SCOPE, "cluster_seq"]
+    return clustered.join(entities.select(*keys, "entity_id"), keys).select(
         "mention_id", "doc_id", "entity_id", "type",
         F.col("text"), "norm", "idx", "global_id", "text_start", "text_stop",
     )
 
 
 def _strong_clusters(
-    mentions: DataFrame, entity_type: str, wd: DataFrame | None
+    mentions: DataFrame, types: tuple[str, ...], wd: DataFrame | None
 ) -> tuple[DataFrame, DataFrame]:
     """Shared preamble of the across-doc pass: the within-doc entities
     (``wd``, or a fresh within-doc pass) with ``norm`` and ``strong``
     columns, and the strong candidates clustered corpus-wide by
     operators/neighborhood.sorted_neighborhood_clusters (distributed
     range sort + boundary stitching — no single-partition stage, the
-    shape that survives 100 TB) with ``cluster_seq`` as cluster id."""
+    shape that survives 100 TB) with ``cluster_seq`` as cluster id.
+    The sort is scoped by (type, strong), so all types share one
+    build."""
     from .neighborhood import sorted_neighborhood_clusters
 
     if wd is None:
-        wd = within_doc_entities(mentions, entity_type)
+        wd = within_doc_entities(mentions, types)
     wd = wd.withColumnRenamed("text", "norm")
-    wd = wd.withColumn("strong", is_strong_candidate(F.col("norm"), entity_type))
+    wd = wd.withColumn("strong", is_strong_candidate(F.col("norm"), types))
     # the within-pass output carries its own cluster_seq; replace it
     strong = sorted_neighborhood_clusters(
         wd.filter(F.col("strong")).drop("cluster_seq"),
@@ -289,10 +364,11 @@ def _strong_clusters(
 
 def across_doc_entities(
     mentions: DataFrame,
-    entity_type: str,
+    entity_type: str | tuple[str, ...],
     wd: DataFrame | None = None,
 ) -> DataFrame:
-    """Across-document coref (src/AcrossDocPerCoref.groovy:46-117).
+    """Across-document coref (src/AcrossDocPerCoref.groovy:46-117) for
+    one type or a tuple of types.
 
     strong candidates: exact + sorted-neighborhood merge, clusters with
     >= MIN_NUM_DOCS members kept, created_by 'across_doc_*_coref';
@@ -300,7 +376,8 @@ def across_doc_entities(
     'weak_across_doc_*_coref'. Input entities are the within-doc pass
     output (pass ``wd`` to reuse a checkpointed one).
     """
-    wd, strong = _strong_clusters(mentions, entity_type, wd)
+    types = _types(entity_type)
+    wd, strong = _strong_clusters(mentions, types, wd)
     # member-count filter (F7): reference drops clusters with fewer
     # than MIN_NUM_DOCS *members* (src/AcrossDocPerCoref.groovy:97-107);
     # num_members rides out of the synthesize aggregation — no second
@@ -308,7 +385,7 @@ def across_doc_entities(
     strong_entities = _synthesize_entities(
         strong,
         ["type", "strong"],
-        F.lit(f"across_doc_{entity_type.lower()}_coref"),
+        _created_by(types, "across_doc_{}_coref"),
         member_id="entity_id",
         weight_col="num_mentions",
     ).filter(F.col("num_members") >= MIN_NUM_DOCS)
@@ -329,7 +406,7 @@ def across_doc_entities(
             F.col("entity_id").cast("long"),
             "type",
             F.col("norm").alias("text"),
-            F.lit(f"weak_across_doc_{entity_type.lower()}_coref").alias("created_by"),
+            _created_by(types, "weak_across_doc_{}_coref").alias("created_by"),
             F.col("num_docs").cast("long"),
             F.col("num_mentions").cast("long"),
             F.col("num_members").cast("long"),
@@ -345,15 +422,16 @@ def across_doc_entities(
 
 def across_doc_membership(
     mentions: DataFrame,
-    entity_type: str,
+    entity_type: str | tuple[str, ...],
     wd: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id, within_entity_id, across_entity_id) for surviving
+    """(doc_id, within_entity_id, across_entity_id, type) for surviving
     *strong* across-doc clusters — the rewired doc->entity edges the
     reference leaves in the graph after mergeClusters
-    (src/CorefBase.groovy:243-252). Feeds the social network (G2).
+    (src/CorefBase.groovy:243-252). Feeds the social network (G2),
+    which keeps the PERSON rows.
     """
-    _, strong = _strong_clusters(mentions, entity_type, wd)
+    _, strong = _strong_clusters(mentions, _types(entity_type), wd)
     member_counts = strong.groupBy("type", "strong", "cluster_seq").agg(
         F.count(F.lit(1)).alias("num_members"),
         F.min("entity_id").alias("across_entity_id"),
@@ -372,6 +450,7 @@ def across_doc_membership(
             "doc_id",
             "within_entity_id",
             F.col("across_entity_id").cast("long").alias("across_entity_id"),
+            "type",
         )
     )
 

@@ -16,6 +16,14 @@ checkpoint is a shuffle-free scan for the next stage, sized by
 like the reference's runStep report. Lucene indexing (S9) is reduced
 to the searchable ``documents`` table itself (SURVEY.md §7 note);
 full-text predicates run as ``rlike``/``contains`` scans.
+
+The reference's three coref steps (PROCESS_PEOPLE, _ORGANIZATIONS,
+_LOCATIONS) run the same algorithm once per type. Here they are one
+coref pass over all three types, keyed by the ``type`` column: one
+within-doc plan, checkpointed to ``work_dir/within_doc``, and one
+sorted-neighborhood build for the across-doc pass. It is timed under
+``process_person``; ``process_organization`` and ``process_location``
+keep their timing keys at 0.0.
 """
 
 from __future__ import annotations
@@ -35,7 +43,12 @@ COREF_TYPES = ("PERSON", "ORGANIZATION", "LOCATION")
 
 
 class IngestResult(dict):
-    """Tables + per-stage wall-clock seconds (runStep parity)."""
+    """Tables + per-stage wall-clock seconds (runStep parity).
+
+    ``timings`` keeps one key per reference step. The one coref pass
+    over all types is timed as ``process_person``; its organization and
+    location work runs in that step, so ``process_organization`` and
+    ``process_location`` read 0.0."""
 
     def __init__(self):
         super().__init__()
@@ -117,41 +130,38 @@ def ingest(
         lambda: _checkpoint(ext(docs), spark, os.path.join(work_dir, "mentions")),
     )
 
-    # 4-5: PROCESS_{PEOPLE,ORGANIZATIONS,LOCATIONS} — within-doc coref,
-    # mention->entity assignment, across-doc coref per type.
-    assigned_parts, within_parts, across_parts, membership_parts = [], [], [], []
-    for etype in COREF_TYPES:
-        def run_type(etype=etype):
-            # firstname-prefix absorption is the person-specific third
-            # pass (combineFirstnameFullname runs in WithinDocPerCoref)
-            pm = etype == "PERSON"
-            wd = coref.within_doc_entities(ment, etype, prefix_merge=pm)
-            assigned = coref.assign_mentions_to_entities(
-                ment, etype, prefix_merge=pm, wd=wd
-            )
-            across = coref.across_doc_entities(ment, etype, wd=wd)
-            member = coref.across_doc_membership(ment, etype, wd=wd)
-            return wd, assigned, across, member
+    # 4-5: PROCESS_{PEOPLE,ORGANIZATIONS,LOCATIONS} — one coref pass
+    # over all three types: every window and aggregation is keyed by
+    # type, so the reference's three runs of the same algorithm become
+    # one within-doc plan, checkpointed once (it feeds the assignment,
+    # the across-doc pass and the membership), and one sorted-
+    # neighborhood build shared by the across-doc pass and the
+    # membership. Firstname-prefix absorption applies to PERSON rows
+    # only (combineFirstnameFullname runs in WithinDocPerCoref).
+    def run_coref():
+        wd = _checkpoint(
+            coref.within_doc_entities(ment, COREF_TYPES, prefix_merge=True),
+            spark,
+            os.path.join(work_dir, "within_doc"),
+        )
+        assigned = coref.assign_mentions_to_entities(
+            ment, COREF_TYPES, prefix_merge=True, wd=wd
+        )
+        across = coref.across_doc_entities(ment, COREF_TYPES, wd=wd)
+        member = coref.across_doc_membership(ment, COREF_TYPES, wd=wd)
+        return wd, assigned, across, member
 
-        wd, assigned, across, member = step(f"process_{etype.lower()}", run_type)
-        within_parts.append(wd)
-        assigned_parts.append(assigned)
-        across_parts.append(across.drop("num_members"))
-        membership_parts.append(member)
+    wd, assigned_all, across, membership = step("process_person", run_coref)
+    # the organization and location work runs in the step above; the
+    # keys stay so the runStep report keeps one entry per reference step
+    res.timings["process_organization"] = 0.0
+    res.timings["process_location"] = 0.0
 
-    def union_all(parts):
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
+    entity_cols = ["entity_id", "type", "text", "created_by", "num_docs", "num_mentions"]
     entities = step(
         "entities_checkpoint",
         lambda: _checkpoint(
-            union_all(
-                [w.select("entity_id", "type", "text", "created_by", "num_docs", "num_mentions") for w in within_parts]
-                + [a.select("entity_id", "type", "text", "created_by", "num_docs", "num_mentions") for a in across_parts]
-            ),
+            wd.select(*entity_cols).unionByName(across.select(*entity_cols)),
             spark,
             os.path.join(work_dir, "entities"),
         ),
@@ -159,15 +169,15 @@ def ingest(
     assigned = step(
         "mentions_assigned",
         lambda: _checkpoint(
-            union_all(assigned_parts), spark, os.path.join(work_dir, "mentions_assigned")
+            assigned_all, spark, os.path.join(work_dir, "mentions_assigned")
         ),
     )
 
     # 4b: social network from across-doc person membership
     def build_sn():
-        person_membership = membership_parts[COREF_TYPES.index("PERSON")]
         doc_ent = (
-            person_membership.select("doc_id", "across_entity_id")
+            membership.filter(F.col("type") == "PERSON")
+            .select("doc_id", "across_entity_id")
             .withColumnRenamed("across_entity_id", "entity_id")
             .dropDuplicates(["doc_id", "entity_id"])
         )

@@ -105,24 +105,12 @@ def incremental_ingest(
         idempotent_append(ext(batch_docs), batch_id, mentions_path)
 
         all_mentions = read_accumulated(spark, mentions_path)
-        parts = []
-        for etype in coref_types:
-            wd = coref.within_doc_entities(all_mentions, etype)
-            parts.append(
-                wd.select(
-                    "entity_id", "type", "text", "created_by",
-                    "num_docs", "num_mentions",
-                )
-            )
-            parts.append(
-                coref.across_doc_entities(all_mentions, etype, wd=wd).select(
-                    "entity_id", "type", "text", "created_by",
-                    "num_docs", "num_mentions",
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        # one coref pass over all types (every window is type-keyed)
+        wd = coref.within_doc_entities(all_mentions, coref_types)
+        cols = ["entity_id", "type", "text", "created_by", "num_docs", "num_mentions"]
+        out = wd.select(*cols).unionByName(
+            coref.across_doc_entities(all_mentions, coref_types, wd=wd).select(*cols)
+        )
         # overwrite into a staging dir then swap would be the durable
         # production shape; plain overwrite is fine for a derived table
         out.write.mode("overwrite").parquet(entities_path)
