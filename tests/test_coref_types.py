@@ -69,6 +69,22 @@ def test_membership_all_types_equals_per_type(spark, derived):
     )
 
 
+def test_assignment_equals_join_definition(spark, derived):
+    """The window-derived assignment equals J7 as defined: each
+    clustered mention joined to its within-doc entity on (doc_id, type,
+    cluster_seq)."""
+    keys = ["doc_id", "type", "cluster_seq"]
+    clusters = coref.within_doc_clusters(derived, COREF_TYPES, prefix_merge=True)
+    entities = coref.within_doc_entities(derived, COREF_TYPES, prefix_merge=True)
+    want = clusters.drop("entity_id").join(
+        entities.select(*keys, "entity_id"), keys
+    ).select(*coref.ASSIGNED_COLS)
+    got = coref.assign_mentions_to_entities(derived, COREF_TYPES, prefix_merge=True)
+    n = coref.normalized_mentions(derived, COREF_TYPES).count()
+    assert got.count() == want.count() == n > 0
+    assert _rows(got) == _rows(want)
+
+
 def _mentions(spark, rows):
     full = [
         (i + 1, doc, etype, text, i + 1, None, 0, len(text))

@@ -71,6 +71,17 @@ def test_full_pipeline_sf0001(spark, sf_dir, tmp_path):
     assert set(os.listdir(star)) >= {
         "documents", "entities", "mentions", "document_entity", "geolocations"
     }
+    # each star table is written once: no other checkpoint in the work
+    # dir holds a copy of one
+    star_cols = [
+        spark.read.parquet(os.path.join(star, t)).columns for t in os.listdir(star)
+    ]
+    work = str(tmp_path / "work")
+    for d in set(os.listdir(work)) - {"star"}:
+        assert spark.read.parquet(os.path.join(work, d)).columns not in star_cols, d
+    # document_entity is unique on its key (the H2 MERGE INTO's dedup)
+    de = spark.read.parquet(os.path.join(star, "document_entity"))
+    assert de.count() == de.select("doc_id", "entity_id").distinct().count()
     # GraphML written
     assert os.path.exists(str(tmp_path / "sn.graphml"))
     assert res["graphml_counts"]["nodes"] >= 0
@@ -90,7 +101,7 @@ def _per_type_coref(ment):
         ents = wd.select(*cols).unionByName(
             coref.across_doc_entities(ment, t, wd=wd).select(*cols)
         )
-        asg = coref.assign_mentions_to_entities(ment, t, prefix_merge=pm, wd=wd)
+        asg = coref.assign_mentions_to_entities(ment, t, prefix_merge=pm)
         entities = ents if entities is None else entities.unionByName(ents)
         assigned = asg if assigned is None else assigned.unionByName(asg)
     return entities, assigned

@@ -168,7 +168,6 @@ def test_prefix_merge_builds_without_jobs(spark):
     sc.setJobGroup(group, "build the prefix-merged within-doc pass")
     try:
         wd = coref.within_doc_entities(m, "PERSON", prefix_merge=True)
-        coref.assign_mentions_to_entities(m, "PERSON", prefix_merge=True, wd=wd)
         coref.assign_mentions_to_entities(m, "PERSON", prefix_merge=True)
         built = list(sc.statusTracker().getJobIdsForGroup(group))
         wd.count()  # control: jobs under this group are visible
@@ -178,6 +177,53 @@ def test_prefix_merge_builds_without_jobs(spark):
         sc.setLocalProperty("spark.job.description", None)
     assert built == [], built
     assert ran, "status tracker saw no job for the control action"
+
+
+def test_assignment_plans_no_join(spark):
+    """The J7 mention -> entity assignment over all coref types is a
+    projection of the within-doc clustering: its executed plan holds
+    no join back to the entity table."""
+    from vizlinc_ingester_spark.operators import coref
+    from vizlinc_ingester_spark.plans.ingest import COREF_TYPES
+
+    m = spark.createDataFrame(
+        [(1, 1, "PERSON", "ANA", 1, None, 0, 3),
+         (2, 1, "PERSON", "ANA MARIA", 2, None, 0, 9),
+         (3, 1, "ORGANIZATION", "ACME", 3, None, 0, 4)],
+        "mention_id long, doc_id long, type string, text string, idx long,"
+        " global_id string, text_start long, text_stop long",
+    )
+    out = coref.assign_mentions_to_entities(m, COREF_TYPES, prefix_merge=True)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+
+
+def test_checkpoint_reads_back_without_jobs(spark, tmp_path):
+    """A plan checkpoint reads its table back with the schema it wrote,
+    so it runs the jobs of its write and no footer-inference job."""
+    from vizlinc_ingester_spark.plans import checkpoint
+
+    df = spark.range(5).selectExpr("id", "cast(id AS string) AS s")
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, "checkpoint read-back guard")
+        try:
+            return fn(), list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    _, write_jobs = jobs_of(
+        "checkpoint-guard-write", lambda: df.write.parquet(str(tmp_path / "w"))
+    )
+    back, ckpt_jobs = jobs_of(
+        "checkpoint-guard", lambda: checkpoint(df, str(tmp_path / "c"))
+    )
+    assert write_jobs, "status tracker saw no job for the control write"
+    assert len(ckpt_jobs) == len(write_jobs), (ckpt_jobs, write_jobs)
+    assert back.schema == spark.read.parquet(str(tmp_path / "c")).schema
+    assert sorted(back.collect()) == sorted(df.collect())
 
 
 def _without_initial_plans(plan: str) -> list[str]:

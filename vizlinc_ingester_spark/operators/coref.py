@@ -16,6 +16,10 @@ window, no iterative fixpoint needed (SURVEY.md §2.10 semantic note).
 The general fixpoint lives in ``operators/graph.py`` for arbitrary
 edge sets.
 
+The within-doc pass has one primitive, ``within_doc_clusters`` (each
+mention with its cluster's entity id): the entities aggregate it and
+the J7 assignment projects it.
+
 The reference runs the algorithm once per entity type. Here every
 window and aggregation is keyed by ``type``, and the per-type rules
 (junk class, strong-candidate predicate, ``created_by``, the
@@ -210,32 +214,15 @@ def normalized_mentions(
     )
 
 
-def _within_doc_clusters(
-    mentions: DataFrame, types: tuple[str, ...], prefix_merge: bool
-) -> DataFrame:
-    """Normalized mentions with their within-doc ``cluster_seq``
-    (unique per (doc_id, type)); the prefix pass applies to PERSON
-    rows only."""
-    clustered = _islands(
-        normalized_mentions(mentions, types), WITHIN_SCOPE, "norm", "mention_id"
-    )
-    if prefix_merge and "PERSON" in types:
-        clustered = _apply_prefix_merge(clustered, types)
-    return clustered
-
-
-def within_doc_entities(
+def within_doc_clusters(
     mentions: DataFrame,
     entity_type: str | tuple[str, ...],
     prefix_merge: bool = False,
 ) -> DataFrame:
-    """Within-document coref (src/WithinDocPerCoref.groovy:32-59):
-    returns entities + their mention assignment.
-
-    ``entity_type`` is one type or a tuple of types. Every window and
-    aggregation is keyed by (doc_id, type), so a tuple runs all types
-    in one plan and its output, filtered to one type, equals that
-    type's own call row for row.
+    """Normalized mentions with their within-doc ``cluster_seq``
+    (unique per (doc_id, type)) and ``entity_id`` = min ``mention_id``
+    of the cluster, the id its within-doc entity gets: a window that
+    the (doc_id, type) exchange of ``_islands`` already satisfies.
 
     ``prefix_merge=False``: exact-match + sorted-neighborhood merge
     (combineByExactMatch + combineAdjacentClose) — the oracle-checked
@@ -247,16 +234,46 @@ def within_doc_entities(
     prefixes only ever link sort-adjacent islands, so the closure is a
     few windows over the island reps (``_apply_prefix_merge``), not an
     iterative fixpoint.
+    """
+    types = _types(entity_type)
+    clustered = _islands(
+        normalized_mentions(mentions, types), WITHIN_SCOPE, "norm", "mention_id"
+    )
+    if prefix_merge and "PERSON" in types:
+        clustered = _apply_prefix_merge(clustered, types)
+    cluster = Window.partitionBy(*WITHIN_SCOPE, "cluster_seq")
+    return clustered.withColumn(
+        "entity_id", F.min("mention_id").over(cluster).cast("long")
+    )
 
+
+def cluster_entities(
+    clusters: DataFrame, entity_type: str | tuple[str, ...]
+) -> DataFrame:
+    """One entity per cluster of ``within_doc_clusters`` output (W3).
     Output: (entity_id, type, text, created_by, num_docs, num_mentions,
     doc_id, cluster_seq) — one row per per-document entity.
     """
-    types = _types(entity_type)
-    clustered = _within_doc_clusters(mentions, types, prefix_merge)
+    created_by = _created_by(_types(entity_type), "within_doc_{}_coref")
     return _synthesize_entities(
-        clustered, WITHIN_SCOPE, _created_by(types, "within_doc_{}_coref"),
-        member_id="mention_id",
+        clusters, WITHIN_SCOPE, created_by, member_id="mention_id"
     ).drop("num_members")
+
+
+def within_doc_entities(
+    mentions: DataFrame,
+    entity_type: str | tuple[str, ...],
+    prefix_merge: bool = False,
+) -> DataFrame:
+    """Within-document coref (src/WithinDocPerCoref.groovy:32-59): the
+    entities of ``within_doc_clusters``. ``entity_type`` is one type or
+    a tuple of types. Every window and aggregation is keyed by
+    (doc_id, type), so a tuple runs all types in one plan and its
+    output, filtered to one type, equals that type's own call row for
+    row."""
+    return cluster_entities(
+        within_doc_clusters(mentions, entity_type, prefix_merge), entity_type
+    )
 
 
 def _apply_prefix_merge(clustered: DataFrame, types: tuple[str, ...]) -> DataFrame:
@@ -310,30 +327,22 @@ def _apply_prefix_merge(clustered: DataFrame, types: tuple[str, ...]) -> DataFra
     ).drop("__rep", "__prev", "__next")
 
 
+#: J7 — an entity-assigned mention (the star ``mentions`` table)
+ASSIGNED_COLS = (
+    "mention_id", "doc_id", "entity_id", "type", "text", "norm", "idx",
+    "global_id", "text_start", "text_stop",
+)
+
+
 def assign_mentions_to_entities(
     mentions: DataFrame,
     entity_type: str | tuple[str, ...],
     prefix_merge: bool = False,
-    wd: DataFrame | None = None,
 ) -> DataFrame:
-    """J7 — mention -> entity_id assignment for the within-doc pass
-    (cluster membership is the join key: ``cluster_seq`` is unique
-    only per (doc_id, type)). ``prefix_merge`` must match the flag
-    used for ``within_doc_entities`` so cluster keys align. Pass a
-    precomputed/persisted ``wd`` (same mentions, types + flag) to
-    avoid re-deriving the entity table — Catalyst does not CSE the
-    shared subplan."""
-    types = _types(entity_type)
-    clustered = _within_doc_clusters(mentions, types, prefix_merge)
-    entities = (
-        wd
-        if wd is not None
-        else within_doc_entities(mentions, types, prefix_merge=prefix_merge)
-    )
-    keys = [*WITHIN_SCOPE, "cluster_seq"]
-    return clustered.join(entities.select(*keys, "entity_id"), keys).select(
-        "mention_id", "doc_id", "entity_id", "type",
-        F.col("text"), "norm", "idx", "global_id", "text_start", "text_stop",
+    """J7 — mention -> within-doc entity_id: a projection of
+    ``within_doc_clusters``."""
+    return within_doc_clusters(mentions, entity_type, prefix_merge).select(
+        *ASSIGNED_COLS
     )
 
 

@@ -35,6 +35,7 @@ from ..functions.text import quality_score_micro
 from ..operators import dedup as dd
 from ..operators.curation import DECON_N, decontaminate_scores, doc_ngrams
 from ..operators.graph import connected_components
+from . import checkpoint
 
 #: drop documents below this heuristic quality (micro-units)
 QUALITY_MIN_MICRO = 200_000
@@ -53,11 +54,6 @@ class CurateResult(dict):
         super().__init__()
         self.timings: dict[str, float] = {}
         self.funnel: dict[str, int] = {}
-
-
-def _checkpoint(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 def curate_corpus(
@@ -87,7 +83,7 @@ def curate_corpus(
         kept = d0.filter(
             quality_score_micro(F.col("text")) >= QUALITY_MIN_MICRO
         )
-        return _checkpoint(kept, spark, os.path.join(work_dir, "q1_quality"))
+        return checkpoint(kept, os.path.join(work_dir, "q1_quality"))
 
     d1 = step("quality", quality)
     res.funnel["quality"] = d1.count()
@@ -102,7 +98,7 @@ def curate_corpus(
             .select("doc_id")
         )
         kept = d1.join(drops, "doc_id", "left_anti")
-        return _checkpoint(kept, spark, os.path.join(work_dir, "q2_exact"))
+        return checkpoint(kept, os.path.join(work_dir, "q2_exact"))
 
     d2 = step("exact_dedup", exact)
     res.funnel["exact_dedup"] = d2.count()
@@ -121,7 +117,7 @@ def curate_corpus(
             F.col("node").alias("doc_id")
         )
         kept = d2.join(drops, "doc_id", "left_anti")
-        return _checkpoint(kept, spark, os.path.join(work_dir, "q3_near"))
+        return checkpoint(kept, os.path.join(work_dir, "q3_near"))
 
     d3 = step("near_dedup", near)
     res.funnel["near_dedup"] = d3.count()
@@ -138,7 +134,7 @@ def curate_corpus(
             .select("doc_id")
         )
         kept = train.join(tainted, "doc_id", "left_anti")
-        return _checkpoint(kept, spark, os.path.join(work_dir, "q4_decon"))
+        return checkpoint(kept, os.path.join(work_dir, "q4_decon"))
 
     d4 = step("decontam", decon)
     res.funnel["decontam"] = d4.count()
@@ -151,7 +147,7 @@ def curate_corpus(
         m = training_manifest_for(
             d4.select("doc_id", F.length("text").cast("long").alias("n_chars"))
         )
-        return _checkpoint(m, spark, os.path.join(work_dir, "q5_manifest"))
+        return checkpoint(m, os.path.join(work_dir, "q5_manifest"))
 
     res["manifest"] = step("manifest", manifest)
     res.funnel["manifest"] = res["manifest"].count()

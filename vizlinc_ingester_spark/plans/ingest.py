@@ -8,22 +8,27 @@ index, export to H2 — each timed by ``runStep``
 dir (src/Ingester.groovy:69-70).
 
 Spark design: each stage is a lazy DataFrame plan; stage boundaries
-that the reference persisted to disk become Parquet checkpoints in
-``work_dir`` — that keeps per-stage lineage short, makes every stage
-restartable, and mirrors exactly what a 1000-executor run wants (each
-checkpoint is a shuffle-free scan for the next stage, sized by
-``spark.sql.files.maxPartitionBytes``). Stage timings are returned
-like the reference's runStep report. Lucene indexing (S9) is reduced
+that the reference persisted to disk become Parquet checkpoints —
+that keeps per-stage lineage short, makes every stage restartable,
+and mirrors exactly what a 1000-executor run wants (each checkpoint
+is a shuffle-free scan for the next stage, sized by
+``spark.sql.files.maxPartitionBytes``). The five star tables are
+checkpointed straight into the star directory, so the H2 export
+(src/GraphDBToH2.groovy:40-165) writes nothing more; the other
+checkpoints stay in ``work_dir``. Stage timings are returned like the
+reference's runStep report. Lucene indexing (S9) is reduced
 to the searchable ``documents`` table itself (SURVEY.md §7 note);
 full-text predicates run as ``rlike``/``contains`` scans.
 
 The reference's three coref steps (PROCESS_PEOPLE, _ORGANIZATIONS,
 _LOCATIONS) run the same algorithm once per type. Here they are one
 coref pass over all three types, keyed by the ``type`` column: one
-within-doc plan, checkpointed to ``work_dir/within_doc``, and one
-sorted-neighborhood build for the across-doc pass. It is timed under
-``process_person``; ``process_organization`` and ``process_location``
-keep their timing keys at 0.0.
+within-doc clustering, checkpointed to ``work_dir/within_doc`` (one
+row per mention) and read by both the within-doc entities and the
+star ``mentions``, and one sorted-neighborhood build for the
+across-doc pass. It is timed under ``process_person``;
+``process_organization`` and ``process_location`` keep their timing
+keys at 0.0.
 """
 
 from __future__ import annotations
@@ -38,6 +43,7 @@ from pyspark.sql import functions as F
 from ..functions import geo
 from ..io import sinks, sources
 from ..operators import coref, counts, curation, geocode, mentions, social
+from . import checkpoint
 
 COREF_TYPES = ("PERSON", "ORGANIZATION", "LOCATION")
 
@@ -48,16 +54,12 @@ class IngestResult(dict):
     ``timings`` keeps one key per reference step. The one coref pass
     over all types is timed as ``process_person``; its organization and
     location work runs in that step, so ``process_organization`` and
-    ``process_location`` read 0.0."""
+    ``process_location`` read 0.0. The star tables are written by the
+    steps that checkpoint them, so ``export_star`` reads 0.0 too."""
 
     def __init__(self):
         super().__init__()
         self.timings: dict[str, float] = {}
-
-
-def _checkpoint(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 def ingest(
@@ -83,8 +85,9 @@ def ingest(
     or a prebuilt ``documents`` DataFrame (doc_id, name, path, text).
     ``extractor``: documents -> mentions DataFrame; defaults to the
     deterministic test double (the CRF seam, src/EntityExtractor.groovy:
-    12-14). Writes the star schema to ``out_dir`` (default
-    ``work_dir/star``) and optionally a GraphML export.
+    12-14). The star tables are checkpointed to ``out_dir`` (default
+    ``work_dir/star``), the other stages to ``work_dir``; optionally
+    writes a GraphML export.
 
     ``curate=True`` appends the LLM training-data funnel as a pipeline
     stage (operators/curation.py — the same oracle-gated transforms as
@@ -95,6 +98,7 @@ def ingest(
     ``chunks``, ``packed_sequences`` tables.
     """
     res = IngestResult()
+    star = out_dir or os.path.join(work_dir, "star")
 
     def step(name: str, fn):
         t0 = time.monotonic()
@@ -119,7 +123,7 @@ def ingest(
             d = sources.extract_text(
                 sources.scan_directory(spark, input_dir, input_ext)
             )
-        return _checkpoint(d, spark, os.path.join(work_dir, "documents"))
+        return checkpoint(d, os.path.join(star, "documents"))
 
     docs = step("extract_text", load_docs)
 
@@ -127,31 +131,28 @@ def ingest(
     ext = extractor or mentions.derive_mentions
     ment = step(
         "find_named_entities",
-        lambda: _checkpoint(ext(docs), spark, os.path.join(work_dir, "mentions")),
+        lambda: checkpoint(ext(docs), os.path.join(work_dir, "mentions")),
     )
 
     # 4-5: PROCESS_{PEOPLE,ORGANIZATIONS,LOCATIONS} — one coref pass
     # over all three types: every window and aggregation is keyed by
     # type, so the reference's three runs of the same algorithm become
-    # one within-doc plan, checkpointed once (it feeds the assignment,
-    # the across-doc pass and the membership), and one sorted-
-    # neighborhood build shared by the across-doc pass and the
+    # one within-doc clustering, checkpointed once (the within-doc
+    # entities aggregate it, the star mentions project it), and one
+    # sorted-neighborhood build shared by the across-doc pass and the
     # membership. Firstname-prefix absorption applies to PERSON rows
     # only (combineFirstnameFullname runs in WithinDocPerCoref).
     def run_coref():
-        wd = _checkpoint(
-            coref.within_doc_entities(ment, COREF_TYPES, prefix_merge=True),
-            spark,
+        clusters = checkpoint(
+            coref.within_doc_clusters(ment, COREF_TYPES, prefix_merge=True),
             os.path.join(work_dir, "within_doc"),
         )
-        assigned = coref.assign_mentions_to_entities(
-            ment, COREF_TYPES, prefix_merge=True, wd=wd
-        )
+        wd = coref.cluster_entities(clusters, COREF_TYPES)
         across = coref.across_doc_entities(ment, COREF_TYPES, wd=wd)
         member = coref.across_doc_membership(ment, COREF_TYPES, wd=wd)
-        return wd, assigned, across, member
+        return clusters, wd, across, member
 
-    wd, assigned_all, across, membership = step("process_person", run_coref)
+    clusters, wd, across, membership = step("process_person", run_coref)
     # the organization and location work runs in the step above; the
     # keys stay so the runStep report keeps one entry per reference step
     res.timings["process_organization"] = 0.0
@@ -160,16 +161,15 @@ def ingest(
     entity_cols = ["entity_id", "type", "text", "created_by", "num_docs", "num_mentions"]
     entities = step(
         "entities_checkpoint",
-        lambda: _checkpoint(
+        lambda: checkpoint(
             wd.select(*entity_cols).unionByName(across.select(*entity_cols)),
-            spark,
-            os.path.join(work_dir, "entities"),
+            os.path.join(star, "entities"),
         ),
     )
     assigned = step(
         "mentions_assigned",
-        lambda: _checkpoint(
-            assigned_all, spark, os.path.join(work_dir, "mentions_assigned")
+        lambda: checkpoint(
+            clusters.select(*coref.ASSIGNED_COLS), os.path.join(star, "mentions")
         ),
     )
 
@@ -181,8 +181,8 @@ def ingest(
             .withColumnRenamed("across_entity_id", "entity_id")
             .dropDuplicates(["doc_id", "entity_id"])
         )
-        return _checkpoint(
-            social.social_network(doc_ent), spark, os.path.join(work_dir, "sn_edges")
+        return checkpoint(
+            social.social_network(doc_ent), os.path.join(work_dir, "sn_edges")
         )
 
     sn_edges = step("social_network", build_sn)
@@ -193,37 +193,30 @@ def ingest(
         locs = entities.filter(
             entities["created_by"] == "across_doc_location_coref"
         ).select("entity_id", "text")
-        return _checkpoint(
-            geocode.resolve_locations(locs, gaz),
-            spark,
-            os.path.join(work_dir, "geolocations"),
+        return checkpoint(
+            geocode.resolve_locations(locs, gaz), os.path.join(star, "geolocations")
         )
 
     geolocations = step("geocode", run_geocode)
 
-    # 7: PRECOMPUTE_COUNTS
+    # 7: PRECOMPUTE_COUNTS — one row per (doc_id, entity_id) group,
+    # so the key is unique without the H2 MERGE INTO's dedup
     document_entity = step(
         "precompute_counts",
-        lambda: _checkpoint(
+        lambda: checkpoint(
             counts.document_entity_counts(assigned),
-            spark,
-            os.path.join(work_dir, "document_entity"),
+            os.path.join(star, "document_entity"),
         ),
     )
 
     # 8: INDEX_DOCS — reduced to the persisted documents table (S9 note)
 
-    # 9: CONVERT_TO_H2 -> star schema parquet (+ optional GraphML)
-    tables = {
-        "documents": docs,
-        "entities": entities,
-        "mentions": assigned,
-        "document_entity": document_entity,
-        "geolocations": geolocations,
-    }
-    step(
-        "export_star",
-        lambda: sinks.write_star_schema(tables, out_dir or os.path.join(work_dir, "star")),
+    # 9: CONVERT_TO_H2 — the steps above checkpointed into ``star``
+    res.timings["export_star"] = 0.0
+    res.update(
+        documents=docs, entities=entities, mentions=assigned,
+        document_entity=document_entity, geolocations=geolocations,
+        sn_edges=sn_edges,
     )
     if graphml_path:
         def export_graphml():
@@ -244,38 +237,27 @@ def ingest(
             if bench_grams is not None:
                 tainted = curation.decontaminate_scores(docs, bench_grams)
                 clean = docs.join(tainted, "doc_id", "left_anti")
-            from pyspark.sql import functions as F
-
             red = curation.redact_pii(clean)
-            curated = _checkpoint(
+            curated = checkpoint(
                 red.select(
                     "doc_id", "name", "path",
                     F.col("text_redacted").alias("text"),
                     "n_emails", "n_phones",
                 ),
-                spark,
                 os.path.join(work_dir, "curated_docs"),
             )
-            chunks = _checkpoint(
-                curation.chunk_documents(curated),
-                spark,
-                os.path.join(work_dir, "chunks"),
+            chunks = checkpoint(
+                curation.chunk_documents(curated), os.path.join(work_dir, "chunks")
             )
             strata = curated.select(
                 "doc_id", tx.lang_id(F.col("text")).alias("lang")
             )
-            packed = _checkpoint(
+            packed = checkpoint(
                 curation.pack_chunks(chunks, strata),
-                spark,
                 os.path.join(work_dir, "packed_sequences"),
             )
             return curated, chunks, packed
 
         curated, chunks, packed = step("curate_corpus", run_curate)
-        tables["curated_docs"] = curated
-        tables["chunks"] = chunks
-        tables["packed_sequences"] = packed
-
-    res.update(tables)
-    res["sn_edges"] = sn_edges
+        res.update(curated_docs=curated, chunks=chunks, packed_sequences=packed)
     return res

@@ -402,13 +402,11 @@ def q_document_entity_counts(spark, sf_dir):
     mention->entity assignment is a pipeline checkpoint like
     mentions/wd/membership (the reference persists these as graph
     edges, src/CorefBase.groovy:24,39,252), so it lives in the stage
-    cache; the cached wd feeds it instead of a re-derivation."""
+    cache."""
     m = derived_mentions(spark, sf_dir)
     assigned = _stage(
         spark, sf_dir, "assigned_PERSON",
-        lambda: coref.assign_mentions_to_entities(
-            m, "PERSON", wd=wd_entities(spark, sf_dir, "PERSON")
-        ),
+        lambda: coref.assign_mentions_to_entities(m, "PERSON"),
     )
     mem = membership(spark, sf_dir, "PERSON")
     me = assigned.join(
