@@ -1,6 +1,6 @@
 """Focused tests for the r15 construction-cost machinery:
-session.read_table / memoized read_spread (input-read plan memo with
-stat-fingerprint freshness) and session.expr_memo (per-session pure
+session.read_table / memoized read_spread (input-read plan memo keyed
+on the session.input_key listing) and session.expr_memo (per-session pure
 Column-tree cache). These guard the two properties the optimization
 leans on: (1) memoized reads are PLANS, not data — a rewrite of the
 files behind an unchanged path must be visible; (2) one cached Column
@@ -35,7 +35,7 @@ def test_read_table_refreshes_on_rewrite(spark, tmp_path_factory):
     spark.range(3).write.parquet(p)
     a = S.read_table(spark, p)
     assert a.count() == 3
-    # rewrite the files behind the SAME path: the stat fingerprint
+    # rewrite the files behind the SAME path: the input_key listing
     # (relpath/size/mtime_ns) must key a FRESH read
     spark.range(7).write.mode("overwrite").parquet(p)
     b = S.read_table(spark, p)
@@ -48,8 +48,8 @@ def test_read_spread_memoizes_decision_and_refreshes(spark, tmp_path_factory):
     spark.range(10).select(F.col("id").alias("k")).coalesce(1).write.parquet(p)
     a = S.read_spread(spark, p, "k")
     assert S.read_spread(spark, p, "k") is a
-    # heavy=False is a distinct memo key (different value: no spread)
-    c = S.read_spread(spark, p, "k", heavy=False)
+    # the plain read is a distinct memo entry (different value: no spread)
+    c = S.read_table(spark, p)
     assert c is not a
     spark.range(4).select(F.col("id").alias("k")).coalesce(1).write.mode(
         "overwrite"

@@ -255,19 +255,19 @@ def test_plan_key_includes_schema(spark):
 
 def test_read_spread_probe(spark, sf_dir, tmp_path):
     """r5 verdict #4: the single-split spread is conditional — a
-    narrow scan with heavy per-row work repartitions; heavy=False or
-    a wide scan leaves the plan shuffle-free."""
+    narrow scan with heavy per-row work repartitions; a plain
+    read_table or a wide scan leaves the plan shuffle-free."""
     import os
 
     from vizlinc_ingester_spark.session import (
-        read_spread, scan_splits_estimate, spread_if_narrow,
+        read_spread, read_table, scan_splits_estimate, spread_if_narrow,
     )
 
     p = os.path.join(sf_dir, "documents.parquet")
     assert scan_splits_estimate(spark, p) < 8
-    wide = read_spread(spark, p, "doc_id", heavy=False)
+    wide = read_table(spark, p)
     assert "Exchange" not in wide._jdf.queryExecution().optimizedPlan().toString()
-    narrow = read_spread(spark, p, "doc_id", heavy=True)
+    narrow = read_spread(spark, p, "doc_id")
     assert "RepartitionByExpression" in narrow._jdf.queryExecution().optimizedPlan().toString()
     # unknown path (e.g. hdfs:// on a cluster) -> treated as wide
     assert scan_splits_estimate(spark, "/no/such/path") >= 1 << 20

@@ -10,7 +10,9 @@ broadcasts, and Arrow enabled for the few Pandas-UDF paths.
 
 from __future__ import annotations
 
+import math
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -94,144 +96,124 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.setLocalProperty(flag, "1")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load every synthetic table in ``sf_dir`` as a DataFrame."""
-    names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out = {}
-    for n in names:
-        p = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(p):
-            out[n] = spark.read.parquet(p)
-    return out
+# --- the one input listing ------------------------------------------------
+
+_SCHEME = re.compile(r"^([A-Za-z][A-Za-z0-9+.-]*):")
 
 
-# --- scan-width probe -----------------------------------------------------
+def input_key(path: str):
+    """``(uri, listing)`` for an input path: the ONE function that stats
+    input files, and the key of every path-derived cache (input reads,
+    the spread probe, the persisted text index, artifact memos).
 
-def scan_splits_estimate(spark: SparkSession, path: str) -> int:
-    """Driver-side estimate of how many input splits a parquet scan of
-    ``path`` gets (no Spark job: file listing + sizes vs
-    ``spark.sql.files.maxPartitionBytes``). Used to decide whether a
-    narrow scan is worth spreading with an explicit repartition. A
-    path this process cannot stat (e.g. an hdfs:// URI on a real
-    cluster) returns a large number — the scale-correct default, since
-    any 100 TB dataset has thousands of splits."""
-    import glob
-    import math
-
-    if os.path.isfile(path):
-        files = [path]
-    elif os.path.isdir(path):
-        files = glob.glob(os.path.join(path, "*.parquet"))
-        if not files:
-            # directory-partitioned layout (key=value subdirs)
-            files = glob.glob(
-                os.path.join(path, "**", "*.parquet"), recursive=True
-            )
+    ``uri`` is the absolute local path; a ``file:`` URI resolves to it,
+    so both spellings share every key. ``listing`` is the sorted tuple
+    of ``(relpath, size, mtime_ns)`` of every regular file under the
+    path (a single file lists as ``"."``, a missing path as ``()``), so
+    rewriting any file changes the key even when the names do not.
+    Other schemes (``hdfs://``, ``s3a://``) return ``(path, None)``:
+    their reads are not memoized and artifacts key on the URI alone. A
+    Hadoop FileSystem listing over py4j would cover them, but cost
+    10-14 ms per file against 0.008 ms for ``os.stat`` (4 vCPU), paid
+    on every query construction."""
+    m = _SCHEME.match(path)
+    if m:
+        if m.group(1).lower() != "file":
+            return path, None
+        path = path[m.end():]
+        if path.startswith("//"):  # file://[host]/abs/path
+            path = "/" + path[2:].partition("/")[2]
+    uri = os.path.abspath(path)
+    if os.path.isdir(uri):
+        files = [os.path.join(r, f) for r, _d, fs in os.walk(uri) for f in fs]
     else:
-        return 1 << 20
-    if not files:
+        files = [uri]
+    listing = []
+    for f in files:
+        try:
+            st = os.stat(f)
+        except OSError:  # missing, or removed mid-walk
+            continue
+        listing.append((os.path.relpath(f, uri), st.st_size, st.st_mtime_ns))
+    return uri, tuple(sorted(listing))
+
+
+def _scan_splits(spark: SparkSession, listing) -> int:
+    # data files only: Spark skips names starting with "." or "_"
+    sizes = [
+        size for rel, size, _mt in listing or ()
+        if rel == "." or (
+            rel.endswith(".parquet")
+            and not any(p.startswith((".", "_")) for p in rel.split(os.sep))
+        )
+    ]
+    if not sizes:
         return 1 << 20
     raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)))
     mpb = int(raw.rstrip("bB")) if raw.rstrip("bB").isdigit() else 128 << 20
-    total = sum(os.path.getsize(f) for f in files)
-    return max(len(files), math.ceil(total / max(1, mpb))) if total else 1
+    total = sum(sizes)
+    return max(len(sizes), math.ceil(total / max(1, mpb))) if total else 1
 
 
-def _stat_fingerprint(path: str):
-    """Cheap content key for an input path (file or directory): the
-    sorted (relpath, size, mtime_ns) of every regular file. Used to
-    key memoized input reads so an in-session rewrite of the files
-    behind an unchanged path still yields a fresh read (the same
-    freshness discipline search_q._corpus_fingerprint applies to the
-    persisted index). Returns None for paths this process cannot stat
-    (e.g. an hdfs:// URI on a real cluster) — callers then skip the
-    memo."""
-    try:
-        if os.path.isdir(path):
-            entries = []
-            for root, _dirs, files in os.walk(path):
-                for fn in files:
-                    p = os.path.join(root, fn)
-                    st = os.stat(p)
-                    entries.append(
-                        (os.path.relpath(p, path), st.st_size, st.st_mtime_ns)
-                    )
-            return tuple(sorted(entries))
-        st = os.stat(path)
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return None
+def scan_splits_estimate(spark: SparkSession, path: str) -> int:
+    """Driver-side estimate of how many input splits a parquet scan of
+    ``path`` gets: the data files of its :func:`input_key` listing
+    against ``spark.sql.files.maxPartitionBytes`` (no Spark job). A
+    path without a listing or data files (e.g. an hdfs:// URI) returns
+    a large number — the scale-correct default, since any 100 TB
+    dataset has thousands of splits."""
+    return _scan_splits(spark, input_key(path)[1])
 
 
 def read_table(spark: SparkSession, path: str):
-    """Memoized ``spark.read.parquet`` for immutable input tables.
+    """Memoized ``spark.read.parquet`` for input tables.
 
     Constructing a parquet read is pure driver-side work (py4j round
-    trip + footer/schema read) measured at 70-90 ms per call on this
-    box — and bench/suite sessions re-read the same fixture tables
-    hundreds of times per sweep (r15 profile: input re-reads alone
-    were ~0.1-0.3 s of every query's construction). The returned
-    DataFrame is an immutable PLAN over the path — no data is cached
-    (nothing is persisted; every action still scans parquet) — so
-    handing every caller the same object changes no result, only the
-    redundant driver work (guide §5: the driver should do almost no
-    work; §7.3: repeated listing/planning is driver-side cost).
-    Freshness: the memo key carries a stat fingerprint of the files,
-    so rewriting them in-session yields a fresh read."""
-    fp = _stat_fingerprint(path)
-    if fp is None:
+    trip + footer/schema read, 70-90 ms per call in the r15 profile),
+    and suite sessions re-read the same tables hundreds of times. The
+    returned DataFrame is an immutable PLAN over the path — nothing is
+    persisted, every action still scans parquet — so handing every
+    caller the same object changes no result. The memo key is the
+    path's :func:`input_key`: rewriting the files in-session yields a
+    fresh read, and a ``file:`` URI shares its plain path's entry.
+    Remote URIs (no listing) are read afresh on every call."""
+    uri, listing = input_key(path)
+    if listing is None:
         return spark.read.parquet(path)
     return plan_memo(
         spark,
-        ("read_table", os.path.abspath(path), fp),
+        ("read_table", uri, listing),
         lambda: spark.read.parquet(path),
     )
 
 
-def read_spread(
-    spark: SparkSession, path: str, key: str, heavy: bool = True
-):
-    """Read a parquet table, spreading a NARROW scan across cores only
-    when the downstream per-row work is heavy enough to pay for the
-    shuffle.
+def read_spread(spark: SparkSession, path: str, key: str):
+    """Read a parquet table for heavy per-row work, spreading a NARROW
+    scan across cores with a hash repartition on ``key``.
 
-    The local fixtures are one small file -> 1 input split, which
-    serializes heavy scan-stage work (shingle hashing, dictionary NER,
-    cosine folds) into one task; an explicit hash repartition fixes
-    that. But the repartition is pure shuffle tax whenever (a) the
-    scan is already wide — at 100 TB every scan has thousands of
-    splits, so this repartition NEVER fires at scale — or (b) the
-    per-row work is light (a token explode feeding a two-level agg
-    parallelizes through its own shuffle; measured locally the spread
-    costs more than it buys: token_topk 0.37 s -> 0.59 s). Callers
-    declare (b) with ``heavy=False``; (a) is probed per path.
+    A one-file table is one input split, which serializes heavy
+    scan-stage work (shingle hashing, dictionary NER, cosine folds)
+    into one task. On a wide scan — every scan at 100 TB — the
+    repartition is pure shuffle tax, so it fires only below
+    ``defaultParallelism / 4`` splits. Light per-row work (a token
+    explode feeding its own aggregation) uses :func:`read_table`.
 
-    The (read + probe + spread decision) is memoized per (session,
-    path content, key, heavy) — the read_table stance: the value is a
-    pure unpersisted plan, the probe is a pure function of the file
-    listing the fingerprint already keys, and re-deriving both cost
-    ~0.1 s of driver time per construction."""
-    fp = _stat_fingerprint(path)
+    The decision is worked out on every call from the
+    :func:`input_key` listing, ``maxPartitionBytes`` and
+    ``defaultParallelism``, and the memo key carries it, so a conf
+    change takes effect at once. Remote URIs count as wide and are
+    read afresh on every call."""
+    uri, listing = input_key(path)
+    par = spark.sparkContext.defaultParallelism
+    spread = par if _scan_splits(spark, listing) < max(2, par // 4) else 0
 
     def build():
         df = spark.read.parquet(path)
-        if not heavy:
-            return df
-        par = spark.sparkContext.defaultParallelism
-        if scan_splits_estimate(spark, path) < max(2, par // 4):
-            df = df.repartition(par, key)
-        return df
+        return df.repartition(spread, key) if spread else df
 
-    if fp is None:
+    if listing is None:
         return build()
-    return plan_memo(
-        spark,
-        ("read_spread", os.path.abspath(path), fp, key, heavy),
-        build,
-    )
+    return plan_memo(spark, ("read_spread", uri, listing, key, spread), build)
 
 
 def spread_if_narrow(df, key: str):
@@ -262,14 +244,18 @@ def spread_if_narrow(df, key: str):
 #
 # - operator-result memos keyed on input plan hashes (``plan_key``):
 #   MinHash/SimHash dedup pipelines, LSH membership, sorted-
-#   neighborhood, IVF assignment, k-means assignment, PQ / residual-PQ
-#   training runs, ANN exact-truth, NER models (dict/ctx/Viterbi),
-#   bigram LM, NB quality model, BPE merge lists + the encoded
-#   fertility vocabulary;
-# - pipeline stage outputs keyed ("stage", sf_dir, name)
-#   (suite/vizlinc.py — the reference's per-stage checkpoint dirs);
-# - input projections keyed ("events_ns", sf_dir)
-#   (suite/relational.py's ts-normalized events).
+#   neighborhood, IVF assignment, k-means assignment, ANN exact-truth,
+#   NER models (dict/ctx/Viterbi), bigram LM, NB quality model, BPE
+#   merge lists + the encoded fertility vocabulary;
+# - path-keyed families, each carrying the ``input_key`` (uri +
+#   listing) of the table it reads, so an in-session rewrite of the
+#   files misses instead of serving a stale value: input reads
+#   (``read_table``/``read_spread``), pipeline stage outputs and the
+#   dedup cluster index over ``documents`` (suite/vizlinc.py — the
+#   reference's per-stage checkpoint dirs — and suite/dedup.py), the
+#   PQ / residual-PQ training runs and encoded corpora over
+#   ``embeddings`` (suite/similarity.py), and the ts-normalized
+#   ``events`` projection (suite/relational.py).
 #
 # Eviction (LRU overflow or explicit ``memo=False`` invalidation)
 # unpersists evicted DataFrames best-effort; correctness never depends
@@ -441,7 +427,15 @@ _EXPR_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 def expr_memo(key, builder):
     """Memoize a pure Column expression per active session (falls back
-    to a plain build when no session is active, e.g. import time)."""
+    to a plain build when no session is active, e.g. import time).
+
+    The dict is unbounded, which is safe only while keys come from a
+    finite set. So the name-dispatched helpers that key on a column
+    name (``suite.dedup.cos_micro``, ``suite.similarity.
+    _hplane_signature``, ``operators.mentions._type_from_word``, and
+    the ``text_col`` of ``operators.dedup.hashed_shingle_docs`` /
+    ``simhash_docs``) take only literal column names written in the
+    source, never names computed at run time."""
     spark = SparkSession.getActiveSession()
     if spark is None:
         return builder()

@@ -1150,7 +1150,7 @@ def q_dedup_keep_best(spark, sf_dir):
     best-of-3 bench row; with it the build runs once per corpus and
     repeat calls are 0.7-0.8 s keeper probes (PLANS.md r9)."""
     from ..functions import text as tx
-    from ..session import plan_memo
+    from ..session import input_key, plan_memo
 
     def build():
         cl = (
@@ -1162,7 +1162,12 @@ def q_dedup_keep_best(spark, sf_dir):
         return cl
 
     clusters = plan_memo(
-        spark, ("dedup_clusters", os.path.abspath(sf_dir)), build
+        spark,
+        (
+            "dedup_clusters",
+            *input_key(os.path.join(sf_dir, "documents.parquet")),
+        ),
+        build,
     )
     quality = _docs(spark, sf_dir).select(
         "doc_id", tx.quality_score_micro(F.col("text")).alias("quality_micro")

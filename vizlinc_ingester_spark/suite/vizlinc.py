@@ -23,15 +23,15 @@ PERSON = ("PERSON",)
 # Per-session materialized stage outputs. The reference pipeline
 # checkpoints every stage to its work dir (src/Ingester.groovy:69-70,
 # 123-128); we mirror that with persisted DataFrames keyed by
-# (sf_dir, stage) in the ONE session cache registry
+# (documents input_key, stage) in the ONE session cache registry
 # (session.plan_memo — single LRU bound, single eviction policy;
 # judge-r10 item 5: this was a second registry with its own policy).
+# Every stage derives from documents.parquet, so its listing keys them
+# all: rewriting the corpus in-session rebuilds the stages.
 
 
 def _stage(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
-    import os
-
-    from ..session import plan_memo
+    from ..session import input_key, plan_memo
 
     def builder():
         df = build().persist()
@@ -39,21 +39,21 @@ def _stage(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
         return df
 
     return plan_memo(
-        spark, ("stage", os.path.abspath(sf_dir), key), builder
+        spark,
+        ("stage", *input_key(os.path.join(sf_dir, "documents.parquet")), key),
+        builder,
     )
 
 
-def docs(spark: SparkSession, sf_dir: str, heavy: bool = True) -> DataFrame:
+def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one small parquet file -> 1 input split; spread heavy scan-stage
     # work across cores — but only when the scan is actually narrow
-    # (never at 100 TB) and the per-row work pays for the shuffle
-    # (callers with light scan work pass heavy=False; see
-    # session.read_spread).
+    # (never at 100 TB); callers with light scan work read the table
+    # with session.read_table instead.
     from ..session import read_spread
 
     return read_spread(
-        spark, os.path.join(sf_dir, "documents.parquet"), "doc_id",
-        heavy=heavy,
+        spark, os.path.join(sf_dir, "documents.parquet"), "doc_id"
     )
 
 
@@ -476,11 +476,14 @@ def q_docs_person_no_location(spark, sf_dir):
 def q_token_topk(spark, sf_dir):
     """Corpus-wide top-50 tokens: the classic two-level aggregation
     (map-side partial count -> final merge -> TakeOrdered). Ties
-    broken by word ascending for determinism. heavy=False: the
-    explode+partial-agg is light per row and the aggregation
-    parallelizes through its own shuffle, so pre-spreading the scan
-    only adds a shuffle (measured 0.37 s -> 0.59 s at sf0.1)."""
-    d = docs(spark, sf_dir, heavy=False)
+    broken by word ascending for determinism. A plain read, not
+    docs(): the explode+partial-agg is light per row and the
+    aggregation parallelizes through its own shuffle, so pre-spreading
+    the scan only adds a shuffle (measured 0.37 s -> 0.59 s at
+    sf0.1)."""
+    from ..session import read_table
+
+    d = read_table(spark, os.path.join(sf_dir, "documents.parquet"))
     toks = d.select(F.explode(F.split("text", " ")).alias("word")).filter(
         F.col("word") != ""
     )
