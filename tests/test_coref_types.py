@@ -85,6 +85,46 @@ def test_assignment_equals_join_definition(spark, derived):
     assert _rows(got) == _rows(want)
 
 
+def test_membership_equals_join_definition(spark, derived):
+    """The window-derived membership equals the rewiring as defined:
+    the strong within-doc entities clustered by the sorted-neighborhood
+    build, each cluster's member count and min entity id by a groupBy,
+    clusters with >= MIN_NUM_DOCS members kept and joined back to their
+    members."""
+    from vizlinc_ingester_spark.operators.neighborhood import (
+        sorted_neighborhood_clusters,
+    )
+
+    keys = ["type", "strong", "cluster_id"]
+    strong = (
+        coref.within_doc_entities(derived, COREF_TYPES)
+        .withColumnRenamed("text", "norm")
+        .withColumn("strong", coref.is_strong_candidate(F.col("norm"), COREF_TYPES))
+        .filter(F.col("strong"))
+        .drop("cluster_seq")
+    )
+    clustered = sorted_neighborhood_clusters(
+        strong, ["type", "strong"], "norm", "entity_id"
+    )
+    surviving = (
+        clustered.groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("num_members"),
+            F.min("entity_id").alias("across_entity_id"),
+        )
+        .filter(F.col("num_members") >= coref.MIN_NUM_DOCS)
+    )
+    want = clustered.join(surviving, keys).select(
+        "doc_id",
+        F.col("entity_id").alias("within_entity_id"),
+        F.col("across_entity_id").cast("long"),
+        "type",
+    )
+    got = coref.across_doc_membership(derived, COREF_TYPES)
+    assert got.count() == want.count() > 0
+    assert _rows(got) == _rows(want)
+
+
 def _mentions(spark, rows):
     full = [
         (i + 1, doc, etype, text, i + 1, None, 0, len(text))

@@ -4,7 +4,8 @@ Each test here pins a freshness property that a path-only key cannot
 give: a trained artifact retrains after an in-session rewrite, a
 ``file:`` URI memoizes like its plain path, the spread decision follows
 the live conf, and no module outside ``session.input_key`` stats input
-files on its own."""
+files on its own. The one other walk, ``session.ship_package``, zips
+this checkout's own package under a name of its own."""
 
 from __future__ import annotations
 
@@ -163,3 +164,15 @@ def test_only_input_key_stats_input_files():
                 if (mod, fn_name) not in ALLOWED:
                     hits.append(f"{mod}.{fn_name}:{n.lineno} {name}")
     assert not hits, hits
+
+
+def test_ship_package_zip_names_this_checkout(spark):
+    """The worker zip is named by a digest of this checkout's package
+    directory, so two checkouts on one host ship their own package."""
+    import hashlib
+
+    S.ship_package(spark)
+    digest = hashlib.sha256(os.path.abspath(PKG_DIR).encode()).hexdigest()[:16]
+    name = f"vizlinc_ingester_spark_pkg_{digest}.zip"
+    shipped = [os.path.basename(f) for f in spark.sparkContext.listFiles]
+    assert name in shipped, shipped

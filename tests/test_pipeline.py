@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from vizlinc_ingester_spark.operators import social
 from vizlinc_ingester_spark.plans import ingest as plan
 
 
@@ -44,11 +45,18 @@ def test_full_pipeline_sf0001(spark, sf_dir, tmp_path):
 
     # the one all-types coref pass equals one single-type call per type
     # over the pipeline's own checkpointed mentions
-    want_entities, want_assigned = _per_type_coref(
+    want_entities, want_assigned, want_member = _per_type_coref(
         spark.read.parquet(str(tmp_path / "work" / "mentions"))
     )
     _assert_same_rows(res["entities"], want_entities)
     _assert_same_rows(res["mentions"], want_assigned)
+    # and the social network is the one over its PERSON membership
+    person_docs = (
+        want_member.filter(F.col("type") == "PERSON")
+        .select("doc_id", F.col("across_entity_id").alias("entity_id"))
+        .dropDuplicates(["doc_id", "entity_id"])
+    )
+    _assert_same_rows(res["sn_edges"], social.social_network(person_docs))
 
     # mentions_assigned references only existing entities
     orphan = (
@@ -88,13 +96,13 @@ def test_full_pipeline_sf0001(spark, sf_dir, tmp_path):
 
 
 def _per_type_coref(ment):
-    """(entities, assigned mentions) built the way the reference runs
-    its coref steps: one single-type call per type, the person pass
-    with prefix absorption."""
+    """(entities, assigned mentions, across-doc membership) built the
+    way the reference runs its coref steps: one single-type call per
+    type, the person pass with prefix absorption."""
     from vizlinc_ingester_spark.operators import coref
 
     cols = ["entity_id", "type", "text", "created_by", "num_docs", "num_mentions"]
-    entities = assigned = None
+    entities = assigned = member = None
     for t in plan.COREF_TYPES:
         pm = t == "PERSON"
         wd = coref.within_doc_entities(ment, t, prefix_merge=pm)
@@ -102,9 +110,11 @@ def _per_type_coref(ment):
             coref.across_doc_entities(ment, t, wd=wd).select(*cols)
         )
         asg = coref.assign_mentions_to_entities(ment, t, prefix_merge=pm)
+        mem = coref.across_doc_membership(ment, t, wd=wd)
         entities = ents if entities is None else entities.unionByName(ents)
         assigned = asg if assigned is None else assigned.unionByName(asg)
-    return entities, assigned
+        member = mem if member is None else member.unionByName(mem)
+    return entities, assigned, member
 
 
 def _assert_same_rows(got, want):

@@ -198,6 +198,23 @@ def test_assignment_plans_no_join(spark):
     assert "Join" not in plan and "CartesianProduct" not in plan, plan
 
 
+def test_membership_plans_no_join(spark, sf_dir):
+    """The across-doc membership over all coref types is a projection
+    of the across-doc clustering: its executed plan holds no join back
+    to per-cluster member counts."""
+    import os
+
+    from vizlinc_ingester_spark.operators import coref, mentions
+    from vizlinc_ingester_spark.plans.ingest import COREF_TYPES
+
+    m = mentions.derive_mentions(
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    )
+    out = coref.across_doc_membership(m, COREF_TYPES)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan[:8000]
+
+
 def test_checkpoint_reads_back_without_jobs(spark, tmp_path):
     """A plan checkpoint reads its table back with the schema it wrote,
     so it runs the jobs of its write and no footer-inference job."""

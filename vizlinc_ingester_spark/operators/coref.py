@@ -346,29 +346,43 @@ def assign_mentions_to_entities(
     )
 
 
-def _strong_clusters(
-    mentions: DataFrame, types: tuple[str, ...], wd: DataFrame | None
-) -> tuple[DataFrame, DataFrame]:
-    """Shared preamble of the across-doc pass: the within-doc entities
-    (``wd``, or a fresh within-doc pass) with ``norm`` and ``strong``
-    columns, and the strong candidates clustered corpus-wide by
+def across_doc_clusters(
+    mentions: DataFrame,
+    entity_type: str | tuple[str, ...],
+    wd: DataFrame | None = None,
+) -> DataFrame:
+    """The across-doc clustering (J4): the strong within-doc entities
+    (``wd``, or a fresh within-doc pass) with ``norm`` and ``strong``,
+    clustered corpus-wide by
     operators/neighborhood.sorted_neighborhood_clusters (distributed
     range sort + boundary stitching — no single-partition stage, the
-    shape that survives 100 TB) with ``cluster_seq`` as cluster id.
-    The sort is scoped by (type, strong), so all types share one
-    build."""
+    shape that survives 100 TB) with ``cluster_seq`` as cluster id, and
+    the cluster's ``across_entity_id`` (min member ``entity_id``) and
+    ``num_members`` as windows over (type, strong, cluster_seq). The
+    sort is scoped by (type, strong), so all types share one build. The
+    across-doc entities aggregate it and the membership projects it,
+    as one cluster map feeds both in src/CorefBase.groovy:243-252."""
     from .neighborhood import sorted_neighborhood_clusters
 
+    types = _types(entity_type)
     if wd is None:
         wd = within_doc_entities(mentions, types)
-    wd = wd.withColumnRenamed("text", "norm")
-    wd = wd.withColumn("strong", is_strong_candidate(F.col("norm"), types))
     # the within-pass output carries its own cluster_seq; replace it
-    strong = sorted_neighborhood_clusters(
-        wd.filter(F.col("strong")).drop("cluster_seq"),
-        ["type", "strong"], "norm", "entity_id",
+    strong = (
+        wd.withColumnRenamed("text", "norm")
+        .withColumn("strong", is_strong_candidate(F.col("norm"), types))
+        .filter(F.col("strong"))
+        .drop("cluster_seq")
+    )
+    clustered = sorted_neighborhood_clusters(
+        strong, ["type", "strong"], "norm", "entity_id"
     ).withColumnRenamed("cluster_id", "cluster_seq")
-    return wd, strong
+    cluster = Window.partitionBy("type", "strong", "cluster_seq")
+    return clustered.select(
+        "*",
+        F.min("entity_id").over(cluster).cast("long").alias("across_entity_id"),
+        F.count(F.lit(1)).over(cluster).alias("num_members"),
+    )
 
 
 def across_doc_entities(
@@ -379,32 +393,35 @@ def across_doc_entities(
     """Across-document coref (src/AcrossDocPerCoref.groovy:46-117) for
     one type or a tuple of types.
 
-    strong candidates: exact + sorted-neighborhood merge, clusters with
-    >= MIN_NUM_DOCS members kept, created_by 'across_doc_*_coref';
+    strong candidates: the entities of ``across_doc_clusters``, clusters
+    with >= MIN_NUM_DOCS members kept, created_by 'across_doc_*_coref';
     weak: exact-match grouping only, unfiltered, created_by
     'weak_across_doc_*_coref'. Input entities are the within-doc pass
     output (pass ``wd`` to reuse a checkpointed one).
     """
     types = _types(entity_type)
-    wd, strong = _strong_clusters(mentions, types, wd)
+    if wd is None:
+        wd = within_doc_entities(mentions, types)
     # member-count filter (F7): reference drops clusters with fewer
-    # than MIN_NUM_DOCS *members* (src/AcrossDocPerCoref.groovy:97-107);
-    # num_members rides out of the synthesize aggregation — no second
-    # scan of the coref lineage.
+    # than MIN_NUM_DOCS *members* (src/AcrossDocPerCoref.groovy:97-107).
+    # Filtering on the clustering's num_members window keeps its
+    # (type, strong, cluster_seq) exchange, which every later window and
+    # aggregation of the synthesis reuses: one shuffle for the strong
+    # entities.
     strong_entities = _synthesize_entities(
-        strong,
+        across_doc_clusters(mentions, types, wd).filter(
+            F.col("num_members") >= MIN_NUM_DOCS
+        ),
         ["type", "strong"],
         _created_by(types, "across_doc_{}_coref"),
         member_id="entity_id",
         weight_col="num_mentions",
-    ).filter(F.col("num_members") >= MIN_NUM_DOCS)
+    ).drop("strong", "cluster_seq")
 
-    weak = wd.filter(~F.col("strong")).withColumn(
-        "cluster_seq", F.lit(0).cast("long")
-    )
     # weak: exact-match only -> cluster key is the name itself
     weak_entities = (
-        weak.groupBy("type", "norm")
+        wd.filter(~is_strong_candidate(F.col("text"), types))
+        .groupBy("type", "text")
         .agg(
             F.min("entity_id").alias("entity_id"),
             F.sum("num_mentions").alias("num_mentions"),
@@ -414,19 +431,14 @@ def across_doc_entities(
         .select(
             F.col("entity_id").cast("long"),
             "type",
-            F.col("norm").alias("text"),
+            "text",
             _created_by(types, "weak_across_doc_{}_coref").alias("created_by"),
             F.col("num_docs").cast("long"),
             F.col("num_mentions").cast("long"),
             F.col("num_members").cast("long"),
         )
     )
-
-    strong_out = strong_entities.select(
-        "entity_id", "type", "text", "created_by", "num_docs", "num_mentions",
-        F.col("num_members").cast("long").alias("num_members"),
-    )
-    return strong_out.unionByName(weak_entities)
+    return strong_entities.unionByName(weak_entities)
 
 
 def across_doc_membership(
@@ -437,28 +449,17 @@ def across_doc_membership(
     """(doc_id, within_entity_id, across_entity_id, type) for surviving
     *strong* across-doc clusters — the rewired doc->entity edges the
     reference leaves in the graph after mergeClusters
-    (src/CorefBase.groovy:243-252). Feeds the social network (G2),
-    which keeps the PERSON rows.
+    (src/CorefBase.groovy:243-252): a projection of
+    ``across_doc_clusters``. Feeds the social network (G2), which keeps
+    the PERSON rows.
     """
-    _, strong = _strong_clusters(mentions, _types(entity_type), wd)
-    member_counts = strong.groupBy("type", "strong", "cluster_seq").agg(
-        F.count(F.lit(1)).alias("num_members"),
-        F.min("entity_id").alias("across_entity_id"),
-    )
-    surviving = member_counts.filter(F.col("num_members") >= MIN_NUM_DOCS)
     return (
-        strong.select(
-            "doc_id",
-            F.col("entity_id").alias("within_entity_id"),
-            "type",
-            "strong",
-            "cluster_seq",
-        )
-        .join(surviving, ["type", "strong", "cluster_seq"])
+        across_doc_clusters(mentions, entity_type, wd)
+        .filter(F.col("num_members") >= MIN_NUM_DOCS)
         .select(
             "doc_id",
-            "within_entity_id",
-            F.col("across_entity_id").cast("long").alias("across_entity_id"),
+            F.col("entity_id").alias("within_entity_id"),
+            "across_entity_id",
             "type",
         )
     )

@@ -49,12 +49,9 @@ from pyspark.sql import functions as F
 from ..functions.normalize import all_numbers_match
 from ..operators.coref import LEVENSHTEIN_MAX
 
-# Results are memoized per (session, input plan) via session.plan_memo
-# — each call persists its windowed relation (two consumers), and a
-# long-lived suite/bench session would otherwise accumulate one
-# orphaned cache entry per CALL (measured: enough block-manager
-# pressure to turn an unrelated 0.65 s bench query into 3.9 s, and
-# explicit unpersist costs ~1 s of driver-side CacheManager work).
+# Results are memoized per (session, input plan) via session.plan_memo:
+# each build persists its windowed relation (two consumers), and the
+# memo bounds those entries by distinct inputs (see plan_memo).
 
 
 def levenshtein(a: str, b: str) -> int:
@@ -95,7 +92,6 @@ def sorted_neighborhood_clusters(
     name_col: str,
     tiebreak_col: str,
     num_partitions: int | None = None,
-    memo: bool = True,
 ) -> DataFrame:
     """Adds ``cluster_id`` (long, globally unique, stable = min possible
     id of the island) to ``df`` — maximal runs of consecutive
@@ -106,9 +102,6 @@ def sorted_neighborhood_clusters(
     single-partition stage), a driver-side reduction over
     numPartitions rows, and a map-literal projection. Everything
     JVM-side; zero Python crossings on the data path.
-
-    ``memo=False`` opts out of the per-session memo AND invalidates
-    any cached entry for this input plan (files rewritten in-session).
     """
     from ..session import plan_key, plan_memo
 
@@ -122,7 +115,6 @@ def sorted_neighborhood_clusters(
         lambda: _sorted_neighborhood_clusters(
             df, scope_cols, name_col, tiebreak_col, num_partitions
         ),
-        memo=memo,
     )
 
 

@@ -22,11 +22,12 @@ full-text predicates run as ``rlike``/``contains`` scans.
 
 The reference's three coref steps (PROCESS_PEOPLE, _ORGANIZATIONS,
 _LOCATIONS) run the same algorithm once per type. Here they are one
-coref pass over all three types, keyed by the ``type`` column: one
-within-doc clustering, checkpointed to ``work_dir/within_doc`` (one
-row per mention) and read by both the within-doc entities and the
-star ``mentions``, and one sorted-neighborhood build for the
-across-doc pass. It is timed under ``process_person``;
+coref pass keyed by ``type``. It checkpoints the within-doc clustering
+(``work_dir/within_doc``, projected to the star ``mentions``) and its
+entities (``work_dir/within_doc_entities``, read by ``entities``, the
+across-doc entities and the membership behind ``sn_edges``). One
+across-doc clustering feeds the last two. It is timed under
+``process_person``;
 ``process_organization`` and ``process_location`` keep their timing
 keys at 0.0.
 """
@@ -137,17 +138,20 @@ def ingest(
     # 4-5: PROCESS_{PEOPLE,ORGANIZATIONS,LOCATIONS} — one coref pass
     # over all three types: every window and aggregation is keyed by
     # type, so the reference's three runs of the same algorithm become
-    # one within-doc clustering, checkpointed once (the within-doc
-    # entities aggregate it, the star mentions project it), and one
-    # sorted-neighborhood build shared by the across-doc pass and the
-    # membership. Firstname-prefix absorption applies to PERSON rows
-    # only (combineFirstnameFullname runs in WithinDocPerCoref).
+    # one within-doc clustering and its entities, each checkpointed
+    # once, and one across-doc clustering that the across-doc entities
+    # aggregate and the membership projects (one sorted-neighborhood
+    # build). Firstname-prefix absorption applies to PERSON rows only
+    # (combineFirstnameFullname runs in WithinDocPerCoref).
     def run_coref():
         clusters = checkpoint(
             coref.within_doc_clusters(ment, COREF_TYPES, prefix_merge=True),
             os.path.join(work_dir, "within_doc"),
         )
-        wd = coref.cluster_entities(clusters, COREF_TYPES)
+        wd = checkpoint(
+            coref.cluster_entities(clusters, COREF_TYPES),
+            os.path.join(work_dir, "within_doc_entities"),
+        )
         across = coref.across_doc_entities(ment, COREF_TYPES, wd=wd)
         member = coref.across_doc_membership(ment, COREF_TYPES, wd=wd)
         return clusters, wd, across, member

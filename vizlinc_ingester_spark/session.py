@@ -64,19 +64,22 @@ def ship_package(spark: SparkSession) -> None:
     able to ``import vizlinc_ingester_spark``. Locally that holds only
     if the driver's cwd is the repo; on a real cluster it never holds.
     The standard deployment answer either way: zip the package and
-    ``addPyFile`` it once per session (idempotent re-adds are cheap —
-    same filename is a no-op).
+    ``addPyFile`` it once per session (same filename is a no-op). The
+    zip is named by a digest of the package directory, so two
+    checkouts on one host never ship each other's package.
     """
     flag = "vizlinc_ingester_spark_shipped"
     jconf = spark.sparkContext.getLocalProperty(flag)
     if jconf == "1":
         return
+    import hashlib
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    digest = hashlib.sha256(pkg_dir.encode()).hexdigest()[:16]
     zip_path = os.path.join(
-        tempfile.gettempdir(), "vizlinc_ingester_spark_pkg.zip"
+        tempfile.gettempdir(), f"vizlinc_ingester_spark_pkg_{digest}.zip"
     )
     newest_src = max(
         os.path.getmtime(os.path.join(r, f))
