@@ -2,6 +2,7 @@
 
 Each test here pins a freshness property that a path-only key cannot
 give: a trained artifact retrains after an in-session rewrite, a
+``plan_key`` memo misses after a rewrite under an already-read path, a
 ``file:`` URI memoizes like its plain path, the spread decision follows
 the live conf, and no module outside ``session.input_key`` stats input
 files on its own. The one other walk, ``session.ship_package``, zips
@@ -104,6 +105,58 @@ def test_read_spread_follows_max_partition_bytes(spark, tmp_path):
     finally:
         spark.conf.set(key, old)
     assert S.read_spread(spark, p, "k") is narrow
+
+
+
+def test_plan_key_sees_overwrite(spark, tmp_path):
+    """A plan hash sees the path, not the files: the key must change
+    when the files under an already-read path are rewritten, and it
+    must see the files under a persisted subtree too."""
+    p = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(p)
+    k1 = S.plan_key(S.read_table(spark, p).filter(F.col("id") > 0), "x")
+    cached = S.read_table(spark, p).persist()
+    try:
+        cached.count()
+        assert S.input_key(p) in S.plan_key(cached.filter(F.col("id") > 0))[2]
+    finally:
+        cached.unpersist()
+    spark.range(7).write.mode("overwrite").parquet(p)
+    k2 = S.plan_key(S.read_table(spark, p).filter(F.col("id") > 0), "x")
+    assert k1 is not None and k2 is not None and k1 != k2
+
+
+def test_across_doc_membership_sees_same_path_rewrite(spark, sf_dir, tmp_path):
+    """Two ingests into one work dir: the across-doc membership over
+    checkpoints rewritten in place equals the one over a fresh path.
+    The sorted-neighborhood memo holds driver-side island maps, so a
+    key that missed the rewrite would apply the first data's maps to
+    the second data."""
+    from vizlinc_ingester_spark.operators import coref
+    from vizlinc_ingester_spark.plans import checkpoint
+    from vizlinc_ingester_spark.plans.ingest import COREF_TYPES
+    from vizlinc_ingester_spark.suite.vizlinc import derived_mentions
+
+    m_all = derived_mentions(spark, sf_dir)
+    ids = sorted(r[0] for r in m_all.select("doc_id").distinct().collect())
+    third = m_all.filter(F.col("doc_id") < ids[len(ids) // 3])
+
+    def membership(mentions, work_dir):
+        m = checkpoint(mentions, os.path.join(work_dir, "mentions"))
+        wd = checkpoint(
+            coref.within_doc_entities(m, COREF_TYPES, prefix_merge=True),
+            os.path.join(work_dir, "within_doc_entities"),
+        )
+        return coref.across_doc_membership(m, COREF_TYPES, wd=wd)
+
+    live, fresh = str(tmp_path / "live"), str(tmp_path / "fresh")
+    first = membership(third, live)
+    first_n = first.count()
+    got = membership(m_all, live)
+    want = membership(m_all, fresh)
+    assert want.count() != first_n
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 #: (module, function) pairs allowed to stat or list files directly:

@@ -60,45 +60,40 @@ def test_eviction_pressure_never_changes_results(spark, sf_dir, monkeypatch):
     assert per_session is not None and len(per_session) == 1
 
 
-def test_memo_false_invalidates_and_rebuilds(spark, sf_dir):
-    """``memo=False`` must evict the cached entry and rebuild —
-    same results, fresh entry (the in-session file-rewrite hook)."""
+def test_lsh_verified_sees_same_path_rewrite(spark, sf_dir, tmp_path):
+    """A checkpoint rewritten in place with other documents must give
+    the near-dup pairs a fresh path gives, not the memoized ones."""
     import vizlinc_ingester_spark.operators.dedup as dd
+    from vizlinc_ingester_spark.plans import checkpoint
     from vizlinc_ingester_spark.suite.vizlinc import docs
 
-    d = docs(spark, sf_dir).limit(50)
-    a = _rows(dd.minhash_lsh_verified(d))
-    b = _rows(dd.minhash_lsh_verified(d, memo=False))
-    assert a == b
+    d = docs(spark, sf_dir).select("doc_id", "text")
+    live, fresh = str(tmp_path / "live"), str(tmp_path / "fresh")
+    half = checkpoint(d.filter(F.col("doc_id") % 2 == 0), live)
+    first = _rows(dd.minhash_lsh_verified(half))
+    got = _rows(dd.minhash_lsh_verified(checkpoint(d, live)))
+    want = _rows(dd.minhash_lsh_verified(checkpoint(d, fresh)))
+    assert want != first
+    assert got == want
 
 
-def test_refresh_mode_registers_fresh_persists(spark, sf_dir):
+def test_refresh_mode_registers_fresh_persists(spark):
     """plan_memo(refresh=True) must evict the stale entry AND store
     the fresh build (r11 review: a bypassed build whose value holds
-    persisted DataFrames would leak them outside the registry).
-    Exercised through the LSH membership path, whose memo=False
-    threading maps to refresh."""
-    import vizlinc_ingester_spark.operators.dedup as dd
-    from vizlinc_ingester_spark.suite.vizlinc import docs
-
-    d = docs(spark, sf_dir).limit(40)
-    sigs = dd.minhash_signatures(d)
-    # start from a clean membership slate: other tests may have left
-    # lsh_members entries for THEIR inputs in the shared registry
+    persisted DataFrames would leak them outside the registry)."""
+    key = ("refresh_t",)
     per = S._PLAN_MEMO.setdefault(spark, {})
-    for k in [k for k in per if "lsh_members" in str(k)]:
-        S._unpersist_quietly(per.pop(k))
-    base = sorted(map(tuple, dd.lsh_candidate_pairs(sigs).collect()))
-    keys_with_members = [k for k in per if "lsh_members" in str(k)]
-    assert len(keys_with_members) == 1, keys_with_members
-    # invalidation path: rebuild is STORED (same key, fresh value)
-    before = per[keys_with_members[0]]
-    out2 = sorted(
-        map(tuple, dd.lsh_candidate_pairs(sigs, memo=False).collect())
+    first = S.plan_memo(spark, key, lambda: spark.range(5).persist())
+    assert S.plan_memo(spark, key, lambda: spark.range(9)) is first
+    fresh = S.plan_memo(
+        spark, key, lambda: spark.range(6).persist(), refresh=True
     )
-    assert out2 == base
-    after = S._PLAN_MEMO.get(spark, {}).get(keys_with_members[0])
-    assert after is not None and after is not before
+    try:
+        assert fresh is not first and per[key] is fresh
+        assert fresh.is_cached and not first.is_cached  # evicted, released
+        assert fresh.count() == 6
+    finally:
+        S._unpersist_quietly(per.pop(key, None))
 
 
 def test_eviction_releases_owned_auxiliary_persists(spark, sf_dir):

@@ -218,32 +218,6 @@ def test_plan_memo_lru_eviction_and_reuse(spark):
         S._PLAN_MEMO.pop(spark_key, None)
 
 
-def test_plan_memo_opt_out_invalidates(spark):
-    """r5 ADVICE (medium): memo=False bypasses AND evicts the stale
-    entry, so stale persisted results cannot be returned after the
-    underlying files change."""
-    from vizlinc_ingester_spark import session as S
-
-    S._PLAN_MEMO.pop(spark, None)
-    calls = []
-
-    def build(tag):
-        def b():
-            calls.append(tag)
-            return spark.range(3)
-        return b
-
-    S.plan_memo(spark, ("inv_t",), build("first"))
-    S.plan_memo(spark, ("inv_t",), build("hit"))
-    assert calls == ["first"]
-    S.plan_memo(spark, ("inv_t",), build("fresh"), memo=False)
-    assert calls == ["first", "fresh"]
-    # the stale entry is gone: the next memoized call rebuilds
-    S.plan_memo(spark, ("inv_t",), build("rebuilt"))
-    assert calls == ["first", "fresh", "rebuilt"]
-    S._PLAN_MEMO.pop(spark, None)
-
-
 def test_plan_key_includes_schema(spark):
     from vizlinc_ingester_spark.session import plan_key
 

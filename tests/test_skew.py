@@ -77,7 +77,7 @@ def test_lsh_buckets_collapse_exact_duplicates(spark):
         .agg(F.max("count")).collect()[0][0]
     )
     assert max_bucket <= 21  # 1 rep for the pile + <=20 distinct
-    pairs = dd.lsh_candidate_pairs(sigs, memo=False)
+    pairs = dd.lsh_candidate_pairs(sigs)
     pile = pairs.filter((F.col("doc_a") < n) & (F.col("doc_b") < n))
     agg = pile.agg(
         F.count(F.lit(1)), F.min("n_shared_bands"), F.max("n_shared_bands")

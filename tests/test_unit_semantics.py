@@ -265,7 +265,9 @@ def test_index_freshness_and_gc(tmp_path):
     os.makedirs(oldver, exist_ok=True)
     os.utime(oldver, (old, old))
     recent = f"{vbase}_v{sq.INDEX_VERSION}_feedfeedfeed"
-    os.makedirs(recent, exist_ok=True)  # mtime = now -> inside grace
+    os.makedirs(recent, exist_ok=True)
+    # mtime = now -> inside grace, also when an earlier run left it
+    os.utime(recent)
     tmp_dir = f"{k2}.tmp-deadbeef"
     os.makedirs(tmp_dir, exist_ok=True)
     os.utime(tmp_dir, (old, old))

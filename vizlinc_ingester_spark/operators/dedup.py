@@ -120,7 +120,7 @@ def lsh_band_buckets(sigs: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(sigs: DataFrame, memo: bool = True) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Band buckets -> distinct unordered candidate pairs with the
     number of colliding bands.
 
@@ -156,13 +156,9 @@ def lsh_candidate_pairs(sigs: DataFrame, memo: bool = True) -> DataFrame:
     membership map and the (signature, rep) representative table —
     so neither the signature kernel nor the collapse groupBy re-runs on
     later actions over the returned pairs (the representative table
-    is one row per DISTINCT signature, 17 longs wide). ``memo=False``
-    (threaded from minhash_lsh_verified's file-rewrite hook) maps to
-    plan_memo's ``refresh`` mode: the stale entry is evicted and the
-    fresh build is STORED — a bypassed build would leave persisted
-    DataFrames registered nowhere, the exact leak the registry exists
-    to prevent. Then one band-key shuffle over representatives and
-    the member expansion joins."""
+    is one row per DISTINCT signature, 17 longs wide). Then one
+    band-key shuffle over representatives and the member expansion
+    joins."""
     from ..session import plan_key, plan_memo
 
     mh_cols = [f"mh{i}" for i in range(N_PERMS)]
@@ -185,8 +181,7 @@ def lsh_candidate_pairs(sigs: DataFrame, memo: bool = True) -> DataFrame:
         return m, r
 
     members, reps = plan_memo(
-        sigs.sparkSession, plan_key(sigs, "lsh_members"), build,
-        refresh=not memo,
+        sigs.sparkSession, plan_key(sigs, "lsh_members"), build
     )
 
     b = lsh_band_buckets(reps)
@@ -322,39 +317,27 @@ def jaccard_verify_hashed(hs_docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_verified(
-    documents: DataFrame, text_col: str = "text", memo: bool = True,
-) -> DataFrame:
+def minhash_lsh_verified(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Full near-dup pipeline: hash shingles once -> signatures ->
     band buckets -> candidate pairs -> exact-Jaccard verify. The
     hashed-shingle relation is persisted: it feeds three branches
     (signatures, sizes, intersection) and recomputing it would triple
     the scan+md5 work. Result memoized per (session, input plan) so
     repeat calls don't stack persisted intermediates
-    (session.plan_memo).
-
-    ``memo=False`` invalidates any cached entry for this input plan —
-    use when the files behind an unchanged path were rewritten
-    in-session (plan hashes see paths, not contents). It maps to
-    plan_memo's refresh mode (evict + rebuild + STORE): the builder's
-    persisted hashed-shingle relation is part of the registered memo
-    value, so eviction — LRU or explicit — unpersists it; a bypassed
-    build would orphan one persisted full-corpus relation per call
-    (r11 review)."""
+    (session.plan_memo; its key sees the files the input reads). The
+    persisted hashed-shingle relation is part of the memo value, so
+    eviction unpersists it."""
     from ..session import plan_key, plan_memo
 
     result, _hs = plan_memo(
         documents.sparkSession,
         plan_key(documents, "minhash_lsh_verified", text_col),
-        lambda: _minhash_lsh_verified(documents, text_col, memo),
-        refresh=not memo,
+        lambda: _minhash_lsh_verified(documents, text_col),
     )
     return result
 
 
-def _minhash_lsh_verified(
-    documents: DataFrame, text_col: str, memo: bool = True,
-) -> DataFrame:
+def _minhash_lsh_verified(documents: DataFrame, text_col: str) -> DataFrame:
     hs_docs = hashed_shingle_docs(documents, text_col).persist()
     # Eagerly materialize the hashed shingles: they feed the signature
     # pass AND the three verify branches of ONE action; an
@@ -366,7 +349,7 @@ def _minhash_lsh_verified(
     # (members, reps) pair then serves every later action without
     # touching the signature kernel again.
     hs_docs.count()
-    pairs = lsh_candidate_pairs(minhash_from_hashed(hs_docs), memo=memo)
+    pairs = lsh_candidate_pairs(minhash_from_hashed(hs_docs))
     # hs_docs rides along in the memo value so eviction unpersists it
     return jaccard_verify_hashed(hs_docs, pairs), hs_docs
 
@@ -432,7 +415,6 @@ def simhash_near_dups(
     documents: DataFrame,
     text_col: str = "text",
     max_hamming: int = 3,
-    _memo: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with GUARANTEED recall for
     ``max_hamming <= 3``: band the 16-bit hash into 4 disjoint 4-bit
@@ -449,17 +431,19 @@ def simhash_near_dups(
     twice. The cached relation is 12 bytes/doc: cacheable at any
     corpus size that fits a cluster at all. Result memoized per
     (session, input plan) — see session.plan_memo."""
-    from ..functions.hashing import hamming16
     from ..session import plan_key, plan_memo
 
-    if _memo:
-        return plan_memo(
-            documents.sparkSession,
-            plan_key(documents, "simhash_near_dups", text_col, max_hamming),
-            lambda: simhash_near_dups(
-                documents, text_col, max_hamming, _memo=False
-            ),
-        )
+    return plan_memo(
+        documents.sparkSession,
+        plan_key(documents, "simhash_near_dups", text_col, max_hamming),
+        lambda: _simhash_near_dups(documents, text_col, max_hamming),
+    )
+
+
+def _simhash_near_dups(
+    documents: DataFrame, text_col: str, max_hamming: int
+) -> DataFrame:
+    from ..functions.hashing import hamming16
 
     n_bands, band_bits = 4, 4
     if max_hamming >= n_bands:

@@ -105,7 +105,7 @@ def curate_corpus(
 
     # 3. near dedup: verified LSH clusters, keep cluster min
     def near():
-        pairs = dd.minhash_lsh_verified(d2, memo=False).filter(
+        pairs = dd.minhash_lsh_verified(d2).filter(
             F.col("jaccard_micro") >= DUP_THRESH_MICRO
         )
         cc = connected_components(

@@ -245,14 +245,15 @@ def spread_if_narrow(df, key: str):
 # families with separate policies invited a cache-interaction bug).
 # The families, all routed through ``plan_memo``:
 #
-# - operator-result memos keyed on input plan hashes (``plan_key``):
-#   MinHash/SimHash dedup pipelines, LSH membership, sorted-
-#   neighborhood, IVF assignment, k-means assignment, ANN exact-truth,
-#   NER models (dict/ctx/Viterbi), bigram LM, NB quality model, BPE
-#   merge lists + the encoded fertility vocabulary;
+# - operator-result memos keyed on ``plan_key``: the input plan's hash
+#   plus the ``input_key`` of every file root it reads, so a rewrite of
+#   those files misses instead of serving a stale value. MinHash/SimHash
+#   dedup pipelines, LSH membership, sorted-neighborhood, IVF
+#   assignment, k-means assignment, ANN exact-truth, NER models
+#   (dict/ctx/Viterbi), bigram LM, NB quality model, BPE merge lists +
+#   the encoded fertility vocabulary;
 # - path-keyed families, each carrying the ``input_key`` (uri +
-#   listing) of the table it reads, so an in-session rewrite of the
-#   files misses instead of serving a stale value: input reads
+#   listing) of the table it reads: input reads
 #   (``read_table``/``read_spread``), pipeline stage outputs and the
 #   dedup cluster index over ``documents`` (suite/vizlinc.py — the
 #   reference's per-stage checkpoint dirs — and suite/dedup.py), the
@@ -260,12 +261,13 @@ def spread_if_narrow(df, key: str):
 #   ``embeddings`` (suite/similarity.py), and the ts-normalized
 #   ``events`` projection (suite/relational.py).
 #
-# Eviction (LRU overflow or explicit ``memo=False`` invalidation)
-# unpersists evicted DataFrames best-effort; correctness never depends
-# on residency — an evicted entry is rebuilt from its pure builder
-# (tests/test_memo_registry.py proves results survive eviction
-# pressure unchanged). Values may be DataFrames, tuples of DataFrames,
-# or plain Python artifacts (merge lists, codebook dicts);
+# A key whose files changed is never asked for again and ages out
+# under the LRU bound. Eviction (LRU overflow or a ``refresh=True``
+# rebuild) unpersists evicted DataFrames best-effort; correctness
+# never depends on residency — an evicted entry is rebuilt from its
+# pure builder (tests/test_memo_registry.py proves results survive
+# eviction pressure unchanged). Values may be DataFrames, tuples of
+# DataFrames, or plain Python artifacts (merge lists, codebook dicts);
 # ``_unpersist_quietly`` handles each.
 
 import weakref
@@ -289,19 +291,44 @@ PLAN_MEMO_MAX_ENTRIES = 192
 _PLAN_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
+def _file_roots(plan) -> list[str]:
+    """Root paths of every file relation among ``plan``'s leaves."""
+    roots = []
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            continue
+        paths = rel.location().rootPaths()
+        roots.extend(paths.apply(j).toString() for j in range(paths.size()))
+    return sorted(set(roots))
+
+
 def plan_key(df, *extra):
     """Memo key for an operator result: the input DataFrame's analyzed
-    semantic hash + its schema + the operator parameters. The 32-bit
+    semantic hash + its schema + the :func:`input_key` of every root
+    path its file relations read + the operator parameters. The 32-bit
     ``semanticHash`` alone can alias two distinct plans; adding the
     canonical schema string keeps the key content-derived (stable for
     re-built but semantically identical plans, unlike expr-id plan
-    strings) while shrinking the collision space. None when the py4j
-    surface is unavailable (callers then skip memoization)."""
+    strings) while shrinking the collision space. The hash sees paths,
+    not files, so the listings make a rewrite under an already-read
+    path miss. They come from the ANALYZED plan because the optimized
+    one swaps persisted subtrees for ``InMemoryRelation`` and hides
+    their files. A remote root (``hdfs://``, ``s3a://``) keys on its
+    URI only, as :func:`input_key` does. None when the py4j surface is
+    unavailable (callers then skip memoization)."""
     try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
+        plan = df._jdf.queryExecution().analyzed()
+        h = plan.semanticHash()
+        roots = _file_roots(plan)
     except Exception:  # pragma: no cover - py4j surface drift
         return None
-    return (h, df.schema.simpleString(), *extra)
+    files = tuple(input_key(r) for r in roots)
+    return (h, df.schema.simpleString(), files, *extra)
 
 
 def own_aux(df, *aux):
@@ -340,10 +367,7 @@ def _unpersist_quietly(value) -> None:
             pass
 
 
-def plan_memo(
-    spark: SparkSession, key, builder, memo: bool = True,
-    refresh: bool = False,
-):
+def plan_memo(spark: SparkSession, key, builder, *, refresh: bool = False):
     """Memoize a built DataFrame per (session, key), LRU-bounded.
 
     Operators that persist() an intermediate (sorted-neighborhood,
@@ -355,16 +379,14 @@ def plan_memo(
     by distinct *inputs* and makes repeat calls free. Safe because
     every memoized operator is a pure function of its input plan.
 
-    ``memo=False`` bypasses the cache AND evicts any existing entry
-    for ``key`` — the invalidation hook for callers that know the
-    files behind an unchanged plan were rewritten in-session (plan
-    hashes see paths, not file contents). ``refresh=True`` is the
-    REGISTERED variant of the same invalidation: evict the stale
-    entry, rebuild, and STORE the fresh value — for builders whose
-    value itself persists DataFrames (LSH membership), where a
-    bypassed build would leave an unregistered persist that nothing
-    ever unpersists (the r11 review leak). Eviction (LRU overflow or
-    explicit) unpersists the evicted DataFrames best-effort; a caller
+    Keys see the files behind their input (:func:`plan_key`,
+    :func:`input_key`), so a rewrite is a new key, not an invalidation.
+    ``refresh=True`` evicts the entry under ``key``, rebuilds, and
+    STORES the fresh value — for slots that rotate (the streaming
+    stores, the search scores) or whose backing dir died; a bypassed
+    build would leave an unregistered persist that nothing ever
+    unpersists (the r11 review leak). Eviction (LRU overflow or
+    refresh) unpersists the evicted DataFrames best-effort; a caller
     still holding one just recomputes.
 
     EXCEPTION to "a caller still holding one just recomputes" (driver
@@ -395,12 +417,6 @@ def plan_memo(
         old = per_session.pop(key, None)
         if old is not None:
             _unpersist_quietly(old)
-        # fall through: rebuild and store below
-    elif not memo:
-        old = per_session.pop(key, None)
-        if old is not None:
-            _unpersist_quietly(old)
-        return builder()
     if key in per_session:
         per_session[key] = per_session.pop(key)  # refresh LRU position
         return per_session[key]
@@ -446,12 +462,3 @@ def expr_memo(key, builder):
     if key not in d:
         d[key] = builder()
     return d[key]
-
-
-def invalidate_plan_memo(spark: SparkSession) -> None:
-    """Drop (and unpersist) every memoized plan for this session —
-    call after rewriting input files under paths already read."""
-    per_session = _PLAN_MEMO.pop(spark, None)
-    if per_session:
-        for v in per_session.values():
-            _unpersist_quietly(v)

@@ -46,17 +46,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_spread(spark, _emb_path(sf_dir), "vec_id")
 
 
-def _emb_memo_key(e: DataFrame, sf_dir: str, *extra):
-    """Memo key for an artifact built over the embeddings read ``e``:
-    its ``plan_key`` plus the table's ``input_key``. The plan hash
-    sees the path, not the files, so without the listing an in-session
-    rewrite of the embeddings would be served the stale artifact."""
-    from ..session import input_key, plan_key
-
-    key = plan_key(e, *extra)
-    return None if key is None else (*key, *input_key(_emb_path(sf_dir)))
-
-
 def q_ann_cosine_topk(spark, sf_dir):
     """Brute-force top-k: query subset x full table. At scale the
     inner side is the full corpus scanned once per batch of queries
@@ -104,7 +93,7 @@ def _ivf_assigned(spark, sf_dir):
     whole assignment scoring on BOTH sides (measured: the r5 bench
     regression 0.72 s -> 0.94 s was this double compute plus JIT
     state; with the persisted index the search is ~0.3 s)."""
-    from ..session import plan_memo
+    from ..session import plan_key, plan_memo
 
     e = _emb(spark, sf_dir)
 
@@ -133,9 +122,7 @@ def _ivf_assigned(spark, sf_dir):
         assigned.count()  # materialize before the self-join fan-out
         return assigned
 
-    return plan_memo(
-        spark, _emb_memo_key(e, sf_dir, "ivf_assign", N_CENTROIDS), build
-    )
+    return plan_memo(spark, plan_key(e, "ivf_assign", N_CENTROIDS), build)
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -718,9 +705,9 @@ def _pq_codes_assigned(spark, sf_dir) -> DataFrame:
     one registry (the _ivf_assigned stance): ann_pq, IVFADC and the
     rerank/eval family all probe the same encoding; before this memo
     each call re-ran the encode groupBys over the full component
-    relation per bench rep. The key carries the embeddings input_key
-    (the plan hash sees the path, not the files), so an in-session
-    rewrite re-encodes with the retrained codebook."""
+    relation per bench rep. Its ``plan_key`` carries the embeddings
+    listing, so an in-session rewrite re-encodes with the retrained
+    codebook."""
     return _codes_assigned(spark, sf_dir, "pq_codes_assigned", _pq_train)
 
 
@@ -731,7 +718,7 @@ def _rpq_codes_assigned(spark, sf_dir) -> DataFrame:
 
 
 def _codes_assigned(spark, sf_dir, name: str, train) -> DataFrame:
-    from ..session import plan_memo
+    from ..session import plan_key, plan_memo
 
     def build():
         comp, cents = train(spark, sf_dir)
@@ -739,7 +726,7 @@ def _codes_assigned(spark, sf_dir, name: str, train) -> DataFrame:
         c.count()
         return c
 
-    key = _emb_memo_key(_emb(spark, sf_dir), sf_dir, name, PQ_M, PQ_K)
+    key = plan_key(_emb(spark, sf_dir), name, PQ_M, PQ_K)
     return plan_memo(spark, key, build)
 
 
@@ -958,7 +945,7 @@ def q_kmeans_clusters(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from ..session import plan_memo
+    from ..session import plan_key, plan_memo
 
     e0 = _emb(spark, sf_dir)
     e = e0.select("vec_id", _micro_vec(F.col("embedding")).alias("em"))
@@ -1035,7 +1022,7 @@ def q_kmeans_clusters(spark, sf_dir):
 
     return plan_memo(
         spark,
-        _emb_memo_key(e0, sf_dir, "kmeans_assign", KMEANS_K, KMEANS_ROUNDS),
+        plan_key(e0, "kmeans_assign", KMEANS_K, KMEANS_ROUNDS),
         build,
     )
 
@@ -1251,7 +1238,7 @@ def _truth_topk(spark, sf_dir) -> DataFrame:
     recomputed the full brute-force scan per bench rep — the two
     slowest bench rows after simjoin in r10). Bounded: N_QUERIES x
     RECALL_K rows."""
-    from ..session import plan_memo
+    from ..session import plan_key, plan_memo
 
     e = _emb(spark, sf_dir)
 
@@ -1266,8 +1253,7 @@ def _truth_topk(spark, sf_dir) -> DataFrame:
         return t
 
     return plan_memo(
-        spark, _emb_memo_key(e, sf_dir, "ann_truth", N_QUERIES, RECALL_K),
-        build,
+        spark, plan_key(e, "ann_truth", N_QUERIES, RECALL_K), build
     )
 
 
