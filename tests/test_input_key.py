@@ -3,10 +3,12 @@
 Each test here pins a freshness property that a path-only key cannot
 give: a trained artifact retrains after an in-session rewrite, a
 ``plan_key`` memo misses after a rewrite under an already-read path, a
-``file:`` URI memoizes like its plain path, the spread decision follows
-the live conf, and no module outside ``session.input_key`` stats input
-files on its own. The one other walk, ``session.ship_package``, zips
-this checkout's own package under a name of its own."""
+read after a rewrite by another writer is not served the data persisted
+over the old files, a ``file:`` URI memoizes like its plain path, the
+spread decision follows the live conf, and no module outside
+``session.input_key`` stats input files on its own. The one other
+walk, ``session.ship_package``, zips this checkout's own package under
+a name of its own."""
 
 from __future__ import annotations
 
@@ -124,6 +126,24 @@ def test_plan_key_sees_overwrite(spark, tmp_path):
     spark.range(7).write.mode("overwrite").parquet(p)
     k2 = S.plan_key(S.read_table(spark, p).filter(F.col("id") > 0), "x")
     assert k1 is not None and k2 is not None and k1 != k2
+
+
+def test_read_sees_rewrite_by_another_writer(spark, tmp_path):
+    """A rewrite that does not go through Spark: Spark's cache matches
+    the new read to the plan persisted over the old files unless the
+    read refreshes the path when its listing changes."""
+    p, other = str(tmp_path / "t.parquet"), str(tmp_path / "other.parquet")
+    spark.range(3).coalesce(1).write.parquet(p)
+    spark.range(7).coalesce(1).write.parquet(other)
+    cached = S.read_table(spark, p).filter("id >= 0").persist()
+    try:
+        assert cached.count() == 3
+        shutil.rmtree(p)
+        shutil.copytree(other, p)
+        assert S.read_table(spark, p).count() == 7
+        assert S.read_table(spark, p).filter("id >= 0").count() == 7
+    finally:
+        cached.unpersist()
 
 
 def test_across_doc_membership_sees_same_path_rewrite(spark, sf_dir, tmp_path):

@@ -13,6 +13,7 @@ from __future__ import annotations
 import math
 import os
 import re
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -22,6 +23,26 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Start (or return) the local session with this engine's conf.
+
+    The driver JVM runs with ``-XX:CICompilerCount=2``, HotSpot's
+    tiered minimum of one C1 and one C2 compiler thread (the ergonomic
+    default on 4 vCPU is 3 threads, two of them C2). Spark generates
+    fresh classes for every plan, and in a short cold session such as
+    one ingest most of that code never runs long enough to repay C2:
+    with two C2 threads, C2 burned 36.5 of the driver JVM's 70.5 CPU-s
+    during one ingest (4 vCPU, median of 6 runs); with one it burned
+    21.6 of 57.8, while executor-task and py4j-thread CPU rose 9% and
+    5%. Only the hottest methods still reach C2, so long sessions give
+    some back (``tests/test_pipeline.py`` ran 1-21% longer). The
+    profile is local-mode and driver-only: the driver JVM runs the
+    tasks, so no ``spark.executor.*`` flag is set. It goes in
+    ``spark.driver.defaultJavaOptions``, which Spark prepends to
+    ``spark.driver.extraJavaOptions``, so a caller's extra options
+    still apply; ``extra_conf`` is applied last, so passing that key
+    there replaces the profile. Like every setting here it takes
+    effect only when this call launches the JVM, not when a
+    ``SparkContext`` already exists in the process."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         # Rule of thumb: 2x cores locally. On a real cluster this is
@@ -40,6 +61,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
@@ -168,6 +190,27 @@ def scan_splits_estimate(spark: SparkSession, path: str) -> int:
     return _scan_splits(spark, input_key(path)[1])
 
 
+#: per session: the listing its reads last saw under each uri
+_READ_LISTINGS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _read_key(spark: SparkSession, path: str):
+    """:func:`input_key` for an input read. When the listing differs
+    from the one this session's reads last saw under the same uri, the
+    files were rewritten, so ``spark.catalog.refreshByPath`` drops the
+    persisted data over the path: Spark's cache matches a new read of
+    the path to a plan persisted over the old files (a file relation
+    compares by root paths), and only Spark's own overwrites re-cache
+    by path."""
+    uri, listing = input_key(path)
+    if listing is not None:
+        seen = _READ_LISTINGS.setdefault(spark, {})
+        if seen.get(uri, listing) != listing:
+            spark.catalog.refreshByPath(uri)
+        seen[uri] = listing
+    return uri, listing
+
+
 def read_table(spark: SparkSession, path: str):
     """Memoized ``spark.read.parquet`` for input tables.
 
@@ -180,7 +223,7 @@ def read_table(spark: SparkSession, path: str):
     path's :func:`input_key`: rewriting the files in-session yields a
     fresh read, and a ``file:`` URI shares its plain path's entry.
     Remote URIs (no listing) are read afresh on every call."""
-    uri, listing = input_key(path)
+    uri, listing = _read_key(spark, path)
     if listing is None:
         return spark.read.parquet(path)
     return plan_memo(
@@ -206,7 +249,7 @@ def read_spread(spark: SparkSession, path: str, key: str):
     ``defaultParallelism``, and the memo key carries it, so a conf
     change takes effect at once. Remote URIs count as wide and are
     read afresh on every call."""
-    uri, listing = input_key(path)
+    uri, listing = _read_key(spark, path)
     par = spark.sparkContext.defaultParallelism
     spread = par if _scan_splits(spark, listing) < max(2, par // 4) else 0
 
@@ -269,8 +312,6 @@ def spread_if_narrow(df, key: str):
 # eviction pressure unchanged). Values may be DataFrames, tuples of
 # DataFrames, or plain Python artifacts (merge lists, codebook dicts);
 # ``_unpersist_quietly`` handles each.
-
-import weakref
 
 #: LRU bound per session. Sized for the merged population: a full
 #: suite session holds ~12 stage outputs + ~15 trained-model/index
