@@ -3,6 +3,7 @@ checks independent of the synthetic corpus and the DuckDB oracle."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from vizlinc_ingester_spark.operators import coref
@@ -221,6 +222,100 @@ def test_kmeans_empty_seed_set_emits_no_rows(spark, tmp_path):
             want = len(con.execute(ORACLES[name]).fetchdf())
             assert want == 0
             assert QUERIES[name](spark, str(tmp_path)).count() == want, name
+    finally:
+        con.close()
+
+
+ZERO_NORM_NAMES = (
+    "ann_cosine_topk", "ann_cosine_topk_vec", "ann_ivf", "ann_lsh",
+    "ann_lsh_banded", "dedup_embedding", "dedup_semantic", "ann_ivf_pq",
+    "ann_ivf_pq_rerank", "ann_recall_eval",
+)
+
+
+@pytest.fixture(scope="module")
+def zero_norm_dir(tmp_path_factory):
+    """300 random vectors with ids 3, 10 (queries and centroids) and
+    200 (a candidate) all zero."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.RandomState(7)
+    emb = rng.uniform(-1, 1, (300, 16)).astype("float32")
+    emb[[3, 10, 200]] = 0.0
+    d = tmp_path_factory.mktemp("zero_norm")
+    pd.DataFrame({
+        "vec_id": np.arange(300, dtype="int64"),
+        "embedding": [row.tolist() for row in emb],
+        "label": (np.arange(300) % 3).astype("int32"),
+    }).to_parquet(d / "embeddings.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ZERO_NORM_NAMES)
+def test_zero_norm_vector_scores_null(spark, zero_norm_dir, name):
+    """A zero-norm vector has no cosine: every name must give the
+    oracle's NULL score (ranked last), not raise DIVIDE_BY_ZERO or
+    emit a cast NaN."""
+    from tests.oracle_harness import compare, duck_con
+    from vizlinc_ingester_spark.suite import collect_suite
+
+    queries, oracles = collect_suite()
+    con = duck_con(zero_norm_dir)
+    try:
+        ok, msg = compare(queries[name](spark, zero_norm_dir), con, oracles[name])
+    finally:
+        con.close()
+    assert ok, msg
+
+
+def test_fold_scores_equal_cos_micro_per_pair(spark):
+    """The numpy fold behind ``ann_cosine_topk`` must give exactly the
+    Column ``cos_micro`` score for every pair (null for a zero norm),
+    not only for the pairs that reach a top-k."""
+    import numpy as np
+
+    from vizlinc_ingester_spark.suite.dedup import cos_micro
+    from vizlinc_ingester_spark.suite.similarity import _fold_scores
+
+    rng = np.random.RandomState(11)
+    emb = rng.uniform(-1, 1, (40, 64)).astype("float32")
+    emb[7] = 0.0
+    df = spark.createDataFrame(
+        [(i, row.tolist()) for i, row in enumerate(emb)], "id long, v array<float>"
+    )
+    pairs = df.alias("a").crossJoin(df.alias("b")).select(
+        F.col("a.id").alias("i"), F.col("b.id").alias("j"),
+        cos_micro(F.col("a.v"), F.col("b.v")).alias("cm"),
+    )
+    got = _fold_scores(emb.astype(np.float64), emb.astype(np.float64))
+    for r in pairs.collect():
+        want = got[r.i, r.j]
+        assert (r.cm is None and np.isnan(want)) or r.cm == want, (r, want)
+
+
+def test_topk_empty_query_batch_emits_no_rows(spark, tmp_path):
+    """With no query id (no vec_id < N_QUERIES) both brute-force top-k
+    names must return the oracle's empty result without raising."""
+    import numpy as np
+    import pandas as pd
+
+    from tests.oracle_harness import compare, duck_con
+    from vizlinc_ingester_spark.suite.similarity import ORACLES, QUERIES
+
+    rng = np.random.RandomState(3)
+    pd.DataFrame({
+        "vec_id": range(100, 160),
+        "embedding": [
+            rng.uniform(-1, 1, 8).astype("float32").tolist() for _ in range(60)
+        ],
+        "label": 0,
+    }).to_parquet(tmp_path / "embeddings.parquet")
+    con = duck_con(str(tmp_path))
+    try:
+        for name in ("ann_cosine_topk", "ann_cosine_topk_vec"):
+            ok, msg = compare(QUERIES[name](spark, str(tmp_path)), con, ORACLES[name])
+            assert ok and msg == "OK (0 rows)", (name, msg)
     finally:
         con.close()
 

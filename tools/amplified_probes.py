@@ -150,11 +150,11 @@ def probe_ann(spark, reps: int = 10) -> None:
     )
     n = spark.read.parquet(os.path.join(tmp, "embeddings.parquet")).count()
     _timed(
-        f"ann_brute_{reps}x", f"{n} vectors (linear scan baseline)",
+        f"ann_brute_{reps}x", f"{n} vectors (top-k kernel, float-fold cosine)",
         lambda: _noop(sim.q_ann_cosine_topk(spark, tmp)),
     )
     _timed(
-        f"ann_brute_vec_{reps}x", f"{n} vectors (numpy matmul)",
+        f"ann_brute_vec_{reps}x", f"{n} vectors (top-k kernel, quantized matmul)",
         lambda: _noop(sim.q_ann_cosine_topk_vec(spark, tmp)),
     )
     _timed(

@@ -26,11 +26,9 @@ from xml.sax.saxutils import escape
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STAR_TABLES = ("documents", "entities", "mentions", "document_entity", "geolocations")
+from ..operators import social
 
-# SN export thresholds (src/SNGephiGraphML.groovy:14-15)
-MIN_NODE_NUM_DOCS = 2
-MIN_EDGE_NUM_DOCS = 2
+STAR_TABLES = ("documents", "entities", "mentions", "document_entity", "geolocations")
 
 
 def write_star_schema(
@@ -196,35 +194,17 @@ def write_star_jdbc(
 
 
 def social_network_for_export(
-    entities: DataFrame,
-    edges: DataFrame,
-    created_by: str = "across_doc_person_coref",
-    min_node_docs: int = MIN_NODE_NUM_DOCS,
-    min_edge_docs: int = MIN_EDGE_NUM_DOCS,
+    entities: DataFrame, edges: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """F8/F9/F10/J8 — the distributed part of the GraphML export:
-    keep persons from the across-doc pass with num_docs >= 2, edges
-    with num_docs >= 2 whose BOTH endpoints survive
-    (src/SNGephiGraphML.groovy:52-84)."""
-    nodes = entities.filter(
-        (F.col("created_by") == created_by) & (F.col("num_docs") >= min_node_docs)
+    """F8/F9/F10/J8 — the distributed part of the GraphML export: the
+    across-doc persons as nodes, filtered with the edges by
+    ``social.filter_social_network`` (src/SNGephiGraphML.groovy:52-84)."""
+    persons = entities.filter(F.col("created_by") == "across_doc_person_coref")
+    kept = social.filter_social_network(edges, persons)
+    nodes = persons.filter(
+        F.col("num_docs") >= social.NODE_MIN_NUM_DOCS
     ).select("entity_id", "text", "num_docs")
-    kept = nodes.select("entity_id")
-    kept_edges = (
-        edges.filter(F.col("num_docs") >= min_edge_docs)
-        .join(
-            F.broadcast(kept.withColumnRenamed("entity_id", "src_entity_id")),
-            "src_entity_id",
-            "left_semi",
-        )
-        .join(
-            F.broadcast(kept.withColumnRenamed("entity_id", "dst_entity_id")),
-            "dst_entity_id",
-            "left_semi",
-        )
-        .select("src_entity_id", "dst_entity_id", "num_docs")
-    )
-    return nodes, kept_edges
+    return nodes, kept
 
 
 def write_graphml(nodes: DataFrame, edges: DataFrame, out_path: str) -> dict:

@@ -50,20 +50,16 @@ def social_network(doc_entities: DataFrame) -> DataFrame:
     )
 
 
-def filter_social_network(
-    edges: DataFrame,
-    node_num_docs: DataFrame,
-    node_min: int = NODE_MIN_NUM_DOCS,
-    edge_min: int = EDGE_MIN_NUM_DOCS,
-) -> DataFrame:
-    """F8/F9/J8 — keep edges with num_docs >= edge_min whose both
-    endpoints have node num_docs >= node_min (double left-semi join).
+def filter_social_network(edges: DataFrame, node_num_docs: DataFrame) -> DataFrame:
+    """F8/F9/J8 — keep edges with num_docs >= EDGE_MIN_NUM_DOCS whose
+    both endpoints have node num_docs >= NODE_MIN_NUM_DOCS (double
+    left-semi join).
 
     node_num_docs: (entity_id, num_docs).
     """
-    kept = node_num_docs.filter(F.col("num_docs") >= node_min).select("entity_id")
+    kept = node_num_docs.filter(F.col("num_docs") >= NODE_MIN_NUM_DOCS).select("entity_id")
     return (
-        edges.filter(F.col("num_docs") >= edge_min)
+        edges.filter(F.col("num_docs") >= EDGE_MIN_NUM_DOCS)
         .join(kept.withColumnRenamed("entity_id", "src_entity_id"), "src_entity_id", "left_semi")
         .join(kept.withColumnRenamed("entity_id", "dst_entity_id"), "dst_entity_id", "left_semi")
         .select("src_entity_id", "dst_entity_id", "num_docs")

@@ -277,7 +277,9 @@ def cos_micro(a, b):
         return expr_memo(
             ("cos_micro", a, b), lambda: cos_micro(F.col(a), F.col(b))
         )
-    cos = _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+    # null for a zero-norm vector, as the oracle's division gives
+    # (ANSI ``/`` raises DIVIDE_BY_ZERO)
+    cos = F.try_divide(_dot(a, b), F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
     return F.floor(cos * 1000000.0).cast("long")
 
 

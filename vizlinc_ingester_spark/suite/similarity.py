@@ -1,11 +1,12 @@
 """Similarity search over the ``embeddings`` table: brute-force cosine
-top-k (the correctness baseline) and an IVF-bucketed variant (the
-scale path — search only the query's nearest-centroid partition).
+top-k (one numpy kernel, ``_brute_topk``, under two arithmetics) and
+the approximate indexes (IVF, LSH, PQ) with their recall evals.
 
 Cosine is computed as an explicit left-fold dot product so both
-engines add in the same order; scores are emitted as
-``floor(cos * 1e6)`` micro-units with (score desc, vec_id asc)
-deterministic ranking.
+engines add in the same order (or over integer-quantized vectors,
+where any order is exact); scores are emitted as ``floor(cos * 1e6)``
+micro-units, null for a zero-norm vector, with (score desc, vec_id
+asc) deterministic ranking.
 """
 
 from __future__ import annotations
@@ -46,26 +47,87 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_spread(spark, _emb_path(sf_dir), "vec_id")
 
 
-def q_ann_cosine_topk(spark, sf_dir):
-    """Brute-force top-k: query subset x full table. At scale the
-    inner side is the full corpus scanned once per batch of queries
-    (queries broadcast, corpus never shuffles)."""
+def _brute_topk(spark, sf_dir, scores) -> DataFrame:
+    """Brute-force top-k: every query ``vec_id < N_QUERIES`` against
+    every other vector, TOPK per query under (score desc, cand_id asc).
+    ``scores(Q, C)`` maps float64 matrices to floored micro scores,
+    NaN where a norm is 0: emitted as a null ``cos_micro`` that ranks
+    below every real score (the oracles' ``NULLS LAST``).
+
+    The 100 TB shape (REPOSE: local top-k, then merge): the query
+    batch is collected and broadcast (fixed-size, never the corpus);
+    each partition scores whole Arrow batches and emits only its local
+    top-k, so the shuffle carries partitions x queries x TOPK rows,
+    not the pair space; one ``row_number`` window merges them."""
+    import numpy as np
+
     e = _emb(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    q_rows = (
+        e.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .collect()
     )
-    pairs = F.broadcast(q).crossJoin(
-        e.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"))
-    ).filter(F.col("query_id") != F.col("cand_id"))
-    scored = pairs.select(
-        "query_id", "cand_id", cos_micro("q_emb", "c_emb").alias("cos_micro")
+    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
+    Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
+    bc = spark.sparkContext.broadcast((qids, Q))
+
+    def local_topk(batches):
+        import pandas as pd
+
+        bqids, bQ = bc.value
+        for pdf in batches:
+            if pdf.empty or not len(bqids):
+                continue
+            cids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            sc = scores(bQ, np.stack(pdf["embedding"]).astype(np.float64))
+            cand = np.broadcast_to(cids, sc.shape)
+            is_self = cand == bqids[:, None]
+            # self pairs sort last, so a row's first TOPK hold a self
+            # pair only when fewer than TOPK others exist
+            order = np.lexsort((cand, -sc, is_self), axis=-1)[:, :TOPK]
+            rows = np.arange(len(bqids))[:, None]
+            keep = ~is_self[rows, order]
+            yield pd.DataFrame({
+                "query_id": np.broadcast_to(bqids[:, None], order.shape)[keep],
+                "cand_id": cand[rows, order][keep],
+                "cos_micro": pd.array(sc[rows, order][keep], dtype="Int64"),
+            })
+
+    local = e.mapInPandas(
+        local_topk, "query_id long, cand_id long, cos_micro long"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_micro"), F.asc("cand_id"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_micro"), F.asc("cand_id")
+    )
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        local.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= TOPK)
         .select("query_id", "cand_id", "cos_micro", "rank")
     )
+
+
+def _fold_scores(Q, C):
+    """``cos_micro`` over whole matrices: dot and norms fold from 0.0
+    one dimension at a time (``dedup._dot``'s IEEE op sequence), then
+    ``floor(dot / (sqrt(qq) * sqrt(cc)) * 1e6)``."""
+    import numpy as np
+
+    dot = np.zeros((len(Q), len(C)))
+    qq = np.zeros(len(Q))
+    cc = np.zeros(len(C))
+    for i in range(Q.shape[1]):
+        dot += Q[:, i, None] * C[None, :, i]
+        qq += Q[:, i] * Q[:, i]
+        cc += C[:, i] * C[:, i]
+    # a zero norm means a zero vector, so its dot is 0 too: 0/0 = NaN
+    with np.errstate(invalid="ignore"):
+        return np.floor(dot / (np.sqrt(qq)[:, None] * np.sqrt(cc)[None, :]) * 1000000.0)
+
+
+def q_ann_cosine_topk(spark, sf_dir):
+    """Brute-force top-k under ``cos_micro``'s float arithmetic (the
+    recall evals' ground truth)."""
+    return _brute_topk(spark, sf_dir, _fold_scores)
 
 
 ORACLE_ANN_TOPK = f"""
@@ -307,14 +369,21 @@ def vec_quantize(arr):
     return Q, np.sqrt((Q * Q).sum(axis=1))
 
 
-def vec_scores_micro(Q, qn, C, cn):
-    """floor(1e6 * (Q @ C.T) / (|q| |c|)) as int64 — the same IEEE op
-    sequence as ``sql_quant_cos_micro``."""
+def _quant_micro(Q, qn, C, cn):
+    """floor(1e6 * (Q @ C.T) / (|q| |c|)), NaN where a norm is 0 —
+    the same IEEE op sequence as ``sql_quant_cos_micro``."""
     import numpy as np
 
-    return np.floor(
-        (1e6 * (Q @ C.T)) / (qn[:, None] * cn[None, :])
-    ).astype(np.int64)
+    with np.errstate(invalid="ignore"):  # 0/0 for a zero norm
+        return np.floor((1e6 * (Q @ C.T)) / (qn[:, None] * cn[None, :]))
+
+
+def vec_scores_micro(Q, qn, C, cn):
+    """``_quant_micro`` as int64 (a zero norm's NaN casts to a
+    platform-defined value)."""
+    import numpy as np
+
+    return _quant_micro(Q, qn, C, cn).astype(np.int64)
 
 
 def sql_quant_cos_micro(a: str, b: str) -> str:
@@ -337,71 +406,15 @@ def sql_quant_iv() -> str:
 )"""
 
 
+def _quant_scores(Q, C):
+    return _quant_micro(*vec_quantize(Q), *vec_quantize(C))
+
+
 def q_ann_cosine_topk_vec(spark, sf_dir):
-    """Brute-force top-k, VECTORIZED: per-partition numpy matmul via
-    ``mapInPandas`` with a broadcast query matrix, emitting each
-    partition's local top-k only — the true 100 TB shape (the
-    interpreted per-pair cosine fold costs ~µs/pair; one BLAS matmul
-    scores a whole Arrow batch at memory bandwidth, and the shuffle
-    carries partitions x queries x k rows, not the pair space).
-
-    Cross-engine exactness: embeddings are quantized to integer-valued
-    doubles (floor(x * 2^20 + 0.5)); with dim 64 and |x| < 1 every
-    product is < 2^40 and every partial sum < 2^53, so float64 dot
-    products are EXACT and order-independent — numpy matmul, the
-    DuckDB fold, and any BLAS kernel agree bit-for-bit. The final
-    score floor(1e6 * dot / (sqrt(nq) * sqrt(nc))) is the same IEEE
-    op sequence in both engines."""
-    import numpy as np
-
-    e = _emb(spark, sf_dir)
-    # The query batch is collected + broadcast: it is the small side
-    # by construction (a serving batch), never the corpus.
-    q_rows = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Q, qn = vec_quantize([r.embedding for r in q_rows])
-    bc = spark.sparkContext.broadcast((qids, Q, qn))
-
-    def score(batches):
-        import pandas as pd
-
-        bqids, bQ, bqn = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            C, cn = vec_quantize(np.stack(pdf["embedding"].to_numpy()))
-            scores = vec_scores_micro(bQ, bqn, C, cn)
-            out_q, out_c, out_s = [], [], []
-            k = TOPK
-            for qi in range(len(bqids)):
-                mask = cids != bqids[qi]
-                sc, cc = scores[qi][mask], cids[mask]
-                # local top-k under the SAME total order as the global
-                # window: (score desc, cand_id asc)
-                order = np.lexsort((cc, -sc))[:k]
-                out_q.extend([bqids[qi]] * len(order))
-                out_c.extend(cc[order])
-                out_s.extend(sc[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "cand_id": out_c, "cos_micro": out_s}
-            )
-
-    local = e.mapInPandas(
-        score, "query_id long, cand_id long, cos_micro long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_micro"), F.asc("cand_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "cand_id", "cos_micro", "rank")
-    )
+    """Brute-force top-k over integer-quantized embeddings
+    (``vec_quantize``): the float64 dots are exact, so one BLAS matmul
+    per Arrow batch agrees bit-for-bit with the DuckDB fold."""
+    return _brute_topk(spark, sf_dir, _quant_scores)
 
 
 ORACLE_ANN_TOPK_VEC = f"""
